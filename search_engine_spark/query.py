@@ -43,7 +43,12 @@ from pyspark.sql import functions as F
 
 from search_engine_spark.codecs import PostingReader
 from search_engine_spark.config import IndexConfig, IndexSettings
-from search_engine_spark.filters import to_column
+from search_engine_spark.filters import (
+    ArrowUnsupported,
+    require_fields,
+    to_arrow,
+    to_column,
+)
 from search_engine_spark.index import IndexPaths, read_meta, term_bucket
 from search_engine_spark.config import (
     NGRAM_PENALTY,
@@ -66,6 +71,11 @@ OUT_SCHEMA = "rank int, docid long, pk string, score double"
 
 def bm25_idf(n_docs: int, df: int) -> float:
     return math.log(1.0 + (n_docs - df + 0.5) / (df + 0.5))
+
+
+def _quote_ident(name: str) -> str:
+    """Backtick-quote a column name for Spark SQL expressions."""
+    return "`" + name.replace("`", "``") + "`"
 
 
 def _plan_terms(plan: "QueryPlan") -> list[str]:
@@ -864,17 +874,19 @@ class SearchIndex:
         no Spark DataFrame is materialized at all (collecting even a 10-row
         local DataFrame costs ~0.35s of py4j round-trips — measured at 4M
         docs, where the query itself runs in ~0.25s); cluster-path queries
-        collect their k-bounded result."""
+        collect their k-bounded result. The route is ``_driver_gate``'s,
+        the same rule ``execute(execution='auto')`` applies: filtered
+        queries take the driver route too when ``sum(df) + n_docs`` fits
+        ``driver_exec_max_postings``."""
         plan = self.plan(query, k, **plan_kw)
         if not plan.term_weights:
             return []
-        if filter_ast is None:
-            rows = self._driver_gate(plan, mode, offset, "auto")
-            if rows is not None:
-                return [
-                    {"rank": r, "docid": d, "pk": p, "score": s}
-                    for r, d, p, s in rows
-                ]
+        rows = self._driver_gate(plan, mode, offset, "auto", filter_ast)
+        if rows is not None:
+            return [
+                {"rank": r, "docid": d, "pk": p, "score": s}
+                for r, d, p, s in rows
+            ]
         return [
             r.asDict()
             for r in self.execute(
@@ -1102,6 +1114,7 @@ class SearchIndex:
         """
         base = self._doc_stats
         if filter_ast is not None:
+            require_fields(filter_ast, base.columns)
             base = base.filter(to_column(filter_ast))
         if query:
             p = self.plan(query, k)
@@ -1148,7 +1161,8 @@ class SearchIndex:
         core = self._doc_stats.agg(
             F.count("*").cast("double").alias("n_docs"),
             F.round(F.avg("dl"), 6).alias("avgdl"),
-            *[F.count(c).cast("double").alias(f"field_{c}") for c in attr_cols],
+            *[F.count(F.col(_quote_ident(c))).cast("double").alias(f"field_{c}")
+              for c in attr_cols],
         )
         tstats = self._terms.agg(
             F.count("*").cast("double").alias("n_terms"),
@@ -1159,9 +1173,11 @@ class SearchIndex:
         names = ["n_docs", "avgdl", "n_terms", "n_postings", "total_tokens"] + [
             f"field_{c}" for c in attr_cols
         ]
-        pairs = ", ".join(f"'{s}', {s}" for s in names)
+        # attribute names are user data: labels go in as literals and
+        # columns as quoted identifiers, so no name is parsed as SQL
+        pairs = [x for s in names for x in (F.lit(s), F.col(_quote_ident(s)))]
         return (
-            row.selectExpr(f"stack({len(names)}, {pairs}) AS (stat, value)")
+            row.select(F.stack(F.lit(len(names)), *pairs).alias("stat", "value"))
             .orderBy("stat")
         )
 
@@ -1237,27 +1253,28 @@ class SearchIndex:
         """``execution``: 'cluster' always runs the document-partitioned
         shard top-k; 'driver' forces the point-read path; 'auto' picks
         'driver' when the query's posting slices are small enough
-        (sum(df) <= driver_exec_max_postings) and no attribute filter is
-        involved. The driver path is the analogue of the reference's
-        per-word LMDB point reads (src/search/db_cache.rs): partition- and
-        row-group-pruned pyarrow reads + the SAME scorer functions, so the
-        two paths are rank-identical (tested). Head terms at web scale blow
-        the threshold and take the cluster path automatically.
+        (``_driver_gate``: sum(df) <= driver_exec_max_postings, plus
+        n_docs when a filter is given, since the driver then scans
+        doc_stats with ``filters.to_arrow``). The driver path is the
+        analogue of the reference's per-word LMDB point reads
+        (src/search/db_cache.rs): partition- and row-group-pruned pyarrow
+        reads + the SAME scorer functions, so the two paths are
+        rank-identical (tested). Head terms at web scale blow the
+        threshold and take the cluster path automatically, as do filters
+        ``to_arrow`` cannot evaluate exactly like Spark (``filters``
+        module docstring; 'driver' raises ValueError for those). A filter
+        naming a field doc_stats lacks raises ValueError on every route.
         """
         spark = self.spark
         if not plan.term_weights:
             return spark.createDataFrame([], OUT_SCHEMA)
 
-        if execution == "driver" and filter_ast is not None:
-            raise ValueError(
-                "execution='driver' cannot be combined with filter_ast: the "
-                "driver point-read path has no attribute store; use "
-                "execution='cluster' or 'auto' for filtered search"
-            )
-        if execution != "cluster" and filter_ast is None:
-            rows = self._driver_gate(plan, mode, offset, execution)
+        if execution != "cluster":
+            rows = self._driver_gate(plan, mode, offset, execution, filter_ast)
             if rows is not None:
                 return self._rows_to_df(rows)
+        elif filter_ast is not None:
+            require_fields(filter_ast, self._doc_stats_ds().schema.names)
 
         algo = _pick_algo(mode, plan, filter_ast is not None)
         if self._partial_tombs is not None:
@@ -1346,10 +1363,7 @@ class SearchIndex:
         stats pruning on docid) — no Spark job for a k-sized lookup."""
         import pyarrow.dataset as ds
 
-        if self._stats_dataset is None:
-            self._stats_dataset = ds.dataset(self.paths.doc_stats,
-                                             format="parquet")
-        tbl = self._stats_dataset.to_table(
+        tbl = self._doc_stats_ds().to_table(
             columns=["docid", "pk"], filter=ds.field("docid").isin(docids))
         return dict(zip(tbl.column("docid").to_pylist(),
                         tbl.column("pk").to_pylist()))
@@ -1418,8 +1432,41 @@ class SearchIndex:
             readers.setdefault(row["term"], []).append((r, scale))
         return readers
 
+    def _doc_stats_ds(self):
+        """pyarrow dataset over doc_stats (every generation, dead rows
+        included), created once per handle. ``gen`` is always in its
+        schema: files written before generations existed read it as null,
+        i.e. generation 0."""
+        import pyarrow as pa
+        import pyarrow.dataset as ds
+
+        if self._stats_dataset is None:
+            d = ds.dataset(self.paths.doc_stats, format="parquet")
+            if "gen" not in d.schema.names:
+                d = ds.dataset(self.paths.doc_stats, format="parquet",
+                               schema=d.schema.append(pa.field("gen", pa.int32())))
+            self._stats_dataset = d
+        return self._stats_dataset
+
+    def _allowed_docids(self, expr) -> np.ndarray:
+        """Sorted live docids whose doc_stats row passes ``expr`` (a
+        ``filters.to_arrow`` expression): one pyarrow scan of doc_stats,
+        then the generation-horizon rule of ``update._filter_dead`` — a
+        row is dead when its docid has a tombstone with horizon > its gen —
+        so a docid replaced in place is judged by its newest version's
+        attributes only. Fully deleted docids are left to the scorer's
+        ``deleted`` mask."""
+        tbl = self._doc_stats_ds().to_table(columns=["docid", "gen"],
+                                            filter=expr)
+        docids = tbl.column("docid").to_numpy()
+        if self._partial_tombs is not None:
+            gen = tbl.column("gen").fill_null(0).to_numpy()
+            docids = docids[_live_post_mask(docids, gen, self._partial_tombs)]
+        return np.unique(docids)
+
     def _driver_gate(
-        self, plan: QueryPlan, mode: str, offset: int, execution: str
+        self, plan: QueryPlan, mode: str, offset: int, execution: str,
+        filter_ast: dict | None = None,
     ) -> list[tuple] | None:
         """The point-read dispatch rule, shared by ``execute()`` and
         ``search_rows()`` so the two APIs can never diverge on which path a
@@ -1427,35 +1474,59 @@ class SearchIndex:
         when the query's total postings fit the algorithm-aware budget
         (strict WAND is a Python pivot loop, ~wand_driver_cost_ratio x the
         vectorized scorers' cost/posting) or when execution='driver' forces
-        it; None -> take the cluster path. Callers guarantee filter_ast is
-        None."""
+        it; None -> take the cluster path.
+
+        A filtered query is served on the driver when ``sum(df) +
+        n_docs_indexed <= driver_exec_max_postings``: the driver scans
+        doc_stats (every row, live or dead) with ``filters.to_arrow``, an
+        O(n_docs) cost charged against the same budget. A filter naming a
+        field doc_stats lacks raises ValueError here. A filter ``to_arrow``
+        cannot evaluate exactly as Spark does raises ``ArrowUnsupported``
+        (non-ASCII string literals, whose lowercasing differs between
+        Spark's and pyarrow's Unicode case tables; literals of another type
+        than the column; NaN/None literals — see the ``filters`` module
+        docstring): such a query takes the cluster route under 'auto', and
+        execution='driver' raises."""
+        expr = None
+        if filter_ast is not None:
+            try:
+                expr = to_arrow(filter_ast, self._doc_stats_ds().schema)
+            except ArrowUnsupported as e:
+                if execution == "driver":
+                    raise ValueError(
+                        f"execution='driver' cannot evaluate this filter "
+                        f"exactly; use 'auto' or 'cluster': {e}") from e
+                return None
         all_terms = _plan_terms(plan)
         dfs = self._lookup_exact(all_terms)
         budget = self.driver_exec_max_postings
-        if _pick_algo(mode, plan, False) == "wand":
+        if expr is None and _pick_algo(mode, plan, False) == "wand":
             budget //= self.wand_driver_cost_ratio
-        small = sum(dfs.values()) <= budget
-        if execution == "driver" or (execution == "auto" and small):
-            return self._execute_driver(plan, mode, offset, all_terms)
+        cost = sum(dfs.values()) + (self.n_docs_indexed if expr is not None else 0)
+        if execution == "driver" or (execution == "auto" and cost <= budget):
+            return self._execute_driver(plan, mode, offset, all_terms, expr)
         return None
 
     def _execute_driver(
-        self, plan: QueryPlan, mode: str, offset: int, all_terms: list[str]
+        self, plan: QueryPlan, mode: str, offset: int, all_terms: list[str],
+        filter_expr=None,
     ) -> list[tuple]:
         """Point-read execution: prune to the query's buckets/terms with
         pyarrow, score in-process with the same _wand_topk/_exhaustive_topk
-        used by the shard UDFs. -> (rank, docid, pk, score) tuples; latency
+        used by the shard UDFs. ``filter_expr`` (``filters.to_arrow``)
+        restricts scoring to ``_allowed_docids``, like the cluster route's
+        cogroup with doc_stats. -> (rank, docid, pk, score) tuples; latency
         is ~ms instead of a Spark job (``search_rows`` exposes them without
         the ~0.35s py4j cost of materializing even a 10-row DataFrame)."""
-        import pyarrow.dataset as ds
-
+        allowed = (None if filter_expr is None
+                   else self._allowed_docids(filter_expr))
         readers = self._readers_for(all_terms)
         deleted = self._deleted if len(self._deleted) else None
-        algo = _pick_algo(mode, plan, False)
+        algo = _pick_algo(mode, plan, allowed is not None)
         plain = (not plan.phrases and not plan.negated and not plan.match_all
                  and not plan.prox_pairs and not plan.word_groups
                  and not plan.exact_boost and not plan.syn_phrases
-                 and self._partial_tombs is None)
+                 and self._partial_tombs is None and allowed is None)
         k = plan.k + offset
         if algo == "wand" and plain:
             pairs = _wand_topk(
@@ -1470,7 +1541,7 @@ class SearchIndex:
         else:
             pairs = _exhaustive_topk(
                 readers, plan.term_weights, plan.phrases, set(plan.negated),
-                None, k, self.avgdl, self.config.k1, self.config.b, deleted,
+                allowed, k, self.avgdl, self.config.k1, self.config.b, deleted,
                 match_all=plan.match_all,
                 prox_pairs=plan.prox_pairs, prox_weight=plan.prox_weight,
                 prox_gaps=plan.prox_gaps, exact_boost=plan.exact_boost,
@@ -2130,10 +2201,11 @@ _POS_MASK = _POS_STRIDE - 1
 
 
 def _live_post_mask(
-    docids: np.ndarray, gen: int, pt: tuple
+    docids: np.ndarray, gen: "int | np.ndarray", pt: tuple
 ) -> np.ndarray:
-    """True where the posting is LIVE under generation-horizon tombstones
-    ``pt = (sorted docids, horizons)``: dead iff horizon > gen."""
+    """True where the posting (or doc_stats row) is LIVE under
+    generation-horizon tombstones ``pt = (sorted docids, horizons)``: dead
+    iff horizon > gen. ``gen`` is one generation or one per docid."""
     td, th = pt
     if not len(td) or not len(docids):
         return np.ones(len(docids), dtype=bool)
@@ -2141,7 +2213,7 @@ def _live_post_mask(
     ic = np.minimum(i, len(td) - 1)
     hit = (i < len(td)) & (td[ic] == docids)
     live = np.ones(len(docids), dtype=bool)
-    live[hit] = th[ic[hit]] <= gen
+    live[hit] = th[ic[hit]] <= (gen[hit] if np.ndim(gen) else gen)
     return live
 
 

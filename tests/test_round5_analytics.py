@@ -479,3 +479,26 @@ def test_snapshot_point_in_time_copy(spark, tmp_path):
     import pytest as _pytest
     with _pytest.raises(ValueError):
         snapshot(src, snap)
+
+
+def test_index_stats_quotes_attribute_names(spark, tmp_path):
+    """Attribute names are user data: a hyphenated one must not break the
+    unpivot expression."""
+    import pandas as pd
+
+    from search_engine_spark.build import build_index
+    from search_engine_spark.config import IndexConfig
+    from search_engine_spark.query import SearchIndex
+
+    pdf = pd.DataFrame({"url": ["a", "b", "c"],
+                        "text": ["alpha beta", "beta gamma", "gamma"],
+                        "lang-code": ["en", None, "de"]})
+    d = str(tmp_path / "hyph")
+    build_index(spark, spark.createDataFrame(pdf), d,
+                IndexConfig(text_col="text", pk_col="url", ts_col=None,
+                            attr_cols=("lang-code",), num_shards=2,
+                            num_buckets=2))
+    got = {r["stat"]: r["value"]
+           for r in SearchIndex(spark, d).stats().collect()}
+    assert got["n_docs"] == 3.0
+    assert got["field_lang-code"] == 2.0

@@ -585,3 +585,92 @@ def test_mutations_on_pre_generation_index(spark, small_index):
     assert [p for p, _ in _pk_results(ix, "banana")] == ["e"]
     assert _pk_results(ix, "spark query", mode="wand") == _pk_results(
         ix, "spark query", mode="exhaustive")
+
+
+_VOCAB = ("spark index engine query table join window stream planner "
+          "optimizer aggregate shuffle").split()
+_LANGS = ("en", "de", "fr")
+
+
+@pytest.fixture()
+def churned_index(spark, tmp_path):
+    """docid_col index with three generations, deletes, and in-place
+    replacements (one docid replaced twice) that move docs to another
+    lang and put 'banana' in their new text."""
+    import numpy as np
+
+    from search_engine_spark.build import build_index
+    from search_engine_spark.config import IndexConfig
+    from search_engine_spark.update import add_documents, delete_documents
+
+    rng = np.random.default_rng(11)
+
+    def batch(ids, shift, prefix=""):
+        rows = [(i, f"k{i}",
+                 prefix + " ".join(rng.choice(_VOCAB, int(rng.integers(2, 8)))),
+                 _LANGS[(i + shift) % 3], float(i % 5)) for i in ids]
+        return spark.createDataFrame(pd.DataFrame(
+            rows, columns=["doc_id", "url", "text", "lang", "stars"]))
+
+    cfg = IndexConfig(text_col="text", pk_col="url", ts_col=None,
+                      docid_col="doc_id", attr_cols=("lang", "stars"),
+                      num_shards=2, num_buckets=2)
+    d = str(tmp_path / "churn")
+    build_index(spark, batch(range(40), 0), d, cfg)
+    add_documents(spark, d, batch([*range(40, 50), 5, 8], 1, "banana "))
+    # a docid_col delete is dead in the generations that exist when it is
+    # made: k3's tombstone becomes a horizon one once gen 2 exists, k11's
+    # and k42's stay dead everywhere
+    delete_documents(spark, d, ["k3"])
+    add_documents(spark, d, batch([5, 6, 7, 20, 41], 2, "banana recipe "))
+    delete_documents(spark, d, ["k11", "k42"])
+    yield d
+    shutil.rmtree(d, ignore_errors=True)
+
+
+def test_filtered_driver_route_rank_identical_to_cluster(spark, churned_index,
+                                                         monkeypatch):
+    """Filtered ``search_rows`` now scores on the driver; it must equal the
+    cluster route's filtered exhaustive scoring on an index with several
+    generations, plain deletes and in-place replacements that change the
+    filtered attribute (only the newest version's attrs may count)."""
+    from search_engine_spark.query import SearchIndex
+
+    ix = SearchIndex(spark, churned_index)
+    assert len(ix._deleted) and ix._partial_tombs is not None
+    assert len(ix.gen_avgdl) == 3
+    filters = [
+        {"lang": "fr"},
+        {"lang": "en"},
+        {"lang": {"$ne": "de"}},
+        {"lang": {"$in": ["de", "fr"]}},
+        {"$not": {"lang": "en"}},
+        {"$and": [{"lang": {"$ne": "fr"}}, {"stars": {"$gte": 2}}]},
+        {"$or": [{"lang": "de"}, {"stars": {"$lt": 1}}]},
+    ]
+    queries = ["banana recipe", "spark query", "window stream planner"]
+    want = {}
+    for q in queries:
+        plan = ix.plan(q, 50)
+        for i, f in enumerate(filters):
+            want[q, i] = [r.asDict() for r in ix.execute(
+                plan, mode="exhaustive", filter_ast=f,
+                execution="cluster").collect()]
+
+    def cluster_route(*a, **kw):
+        raise AssertionError("filtered search_rows left the driver route")
+
+    monkeypatch.setattr(ix, "execute", cluster_route)
+    for (q, i), ref in want.items():
+        got = ix.search_rows(q, k=50, filter_ast=filters[i])
+        assert [r["docid"] for r in got] == [r["docid"] for r in ref], (q, i)
+        assert [round(r["score"], 6) for r in got] == [
+            round(r["score"], 6) for r in ref], (q, i)
+        assert [r["pk"] for r in got] == [r["pk"] for r in ref], (q, i)
+        page = ix.search_rows(q, k=3, offset=2, filter_ast=filters[i])
+        assert [r["docid"] for r in page] == [r["docid"] for r in ref[2:5]]
+    # docs 5, 8 and 20 were 'fr' before their replacements: the dead
+    # versions' attrs must not let them through
+    fr = {r["docid"] for r in ix.search_rows("banana", k=50,
+                                             filter_ast={"lang": "fr"})}
+    assert fr and not fr & {5, 8, 20}

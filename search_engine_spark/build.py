@@ -60,7 +60,6 @@ from search_engine_spark.analysis import (
 from search_engine_spark.codecs import (
     delta_decode_runs,
     delta_encode_runs,
-    encode_postings,
     encode_postings_batch,
     varint_decode,
     varint_encode_runs,

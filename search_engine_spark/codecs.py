@@ -227,11 +227,16 @@ def delta_decode_runs(deltas: np.ndarray, run_starts: np.ndarray) -> np.ndarray:
     return c - np.repeat(base, reps)
 
 
-def bm25_impact(tf: np.ndarray, dl: np.ndarray, avgdl: float, k1: float, b: float) -> np.ndarray:
-    """Document-dependent BM25 factor: tf / (tf + k1*(1 - b + b*dl/avgdl))."""
+def bm25_impact(
+    tf: np.ndarray, dl: np.ndarray, avgdl: float, k1: float, b: float,
+    weight: float = 1.0,
+) -> np.ndarray:
+    """The one BM25 kernel: weight * tf / (tf + k1*(1 - b + b*dl/avgdl)).
+    ``weight`` 1.0 gives the document-dependent impact the block-max
+    metadata stores; a term's idf weight gives its score contribution."""
     tf = tf.astype(np.float64)
     denom = tf + k1 * (1.0 - b + b * dl.astype(np.float64) / max(avgdl, 1e-12))
-    return tf / denom
+    return weight * tf / denom
 
 
 @dataclass

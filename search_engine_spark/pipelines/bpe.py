@@ -47,8 +47,8 @@ def _initial_segments(word_col: str) -> Column:
     )
 
 
-def _pairs(sym: Column) -> Column:
-    """Adjacent symbol pairs of one word's segment array, in-row."""
+def _pairs() -> Column:
+    """Adjacent symbol pairs of the ``sym`` segment array, in-row."""
     return F.expr(
         "CASE WHEN size(sym) >= 2 THEN "
         "transform(sequence(1, size(sym) - 1), "
@@ -80,7 +80,6 @@ def learn_bpe(
     df: DataFrame,
     n_merges: int = 10,
     min_pair_count: int = 2,
-    id_col: str = "doc_id",
     text_col: str = "text",
 ) -> DataFrame:
     """Learn ``n_merges`` BPE merges from the corpus (see module doc).
@@ -101,7 +100,7 @@ def learn_bpe(
     merges: list[tuple[int, str, str, int]] = []
     for rank in range(1, int(n_merges) + 1):
         best = (
-            seg.select("wc", F.explode(_pairs(F.col("sym"))).alias("p"))
+            seg.select("wc", F.explode(_pairs()).alias("p"))
             .groupBy("p.l", "p.r")
             .agg(F.sum("wc").alias("cnt"))
             .orderBy(F.desc("cnt"), "l", "r")

@@ -795,7 +795,11 @@ def pq_encode(
     as the IVF assignment. -> (vec_id, codes: array<int>).
     """
     first = emb.select(F.size(vec_col).alias("d")).first()
+    if first is None:
+        raise ValueError("pq_encode: empty input")
     dim = int(first["d"])
+    if dim % m != 0:
+        raise ValueError(f"pq_encode: dim {dim} not divisible by m={m}")
     sub_d = dim // m
     carr = codebooks.agg(
         F.sort_array(

@@ -12,12 +12,17 @@ top-k):
    pruning on ``bucket=`` + parquet row-group pruning on ``term``) — the
    Spark analogue of the reference's per-word LMDB point reads memoized in
    ``DatabaseCache`` (``src/search/db_cache.rs``);
-3. per shard (``groupBy('shard')``, or ``cogroup`` with the filter's allowed
-   docids): score inside an Arrow-batched pandas UDF with a bounded top-k —
-   either vectorized exhaustive numpy scoring or block-max WAND with a
-   k-sized min-heap (the north rule's pruning; the analogue of the
-   reference's bucket-refinement candidate subtraction,
-   ``ranking/words.rs:66``);
+3. score with a bounded top-k through one entry, ``_topk``, running the
+   scorer ``_pick_algo`` chooses: vectorized block-max MaxScore by default;
+   block-max WAND with a k-sized min-heap under ``mode='wand'`` (the north
+   rule's pruning; the analogue of the reference's bucket-refinement
+   candidate subtraction, ``ranking/words.rs:66``); exhaustive numpy scoring
+   for phrases, negation, filters, generation-horizon tombstones and the
+   score-shaping features. A query whose postings fit
+   ``driver_exec_max_postings`` is scored on the driver over pyarrow point
+   reads (``_driver_gate``); the rest per shard (``groupBy('shard')``, or
+   ``cogroup`` with the filter's allowed docids) inside an Arrow-batched
+   pandas UDF;
 4. global merge: ``orderBy(score desc, docid asc).limit(k)`` over <=
    num_shards*k candidate rows, then join display columns back from
    doc_stats (reference O2 ``obkv_to_json``, ``src/lib.rs:209-234``).
@@ -34,14 +39,14 @@ import heapq
 import math
 import os
 from collections.abc import Iterable
-from dataclasses import dataclass, field as dc_field
+from dataclasses import dataclass, field as dc_field, replace
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from search_engine_spark.codecs import PostingReader
+from search_engine_spark.codecs import PostingReader, bm25_impact
 from search_engine_spark.config import IndexConfig, IndexSettings
 from search_engine_spark.filters import (
     ArrowUnsupported,
@@ -90,19 +95,31 @@ def _plan_terms(plan: "QueryPlan") -> list[str]:
     )
 
 
-def _pick_algo(mode: str, plan: "QueryPlan", has_filter: bool) -> str:
-    """mode -> scoring algorithm. 'auto' prefers vectorized block-max
-    MaxScore (rank-identical, batch-friendly); 'wand' keeps the classic
-    per-posting heap WAND (north-rule parity path); both silently fall
-    back to exhaustive for phrases/negation/filter/match_all/proximity
-    inside the scorer."""
-    if mode in ("wand", "maxscore", "exhaustive"):
-        return mode
-    if (plan.phrases or plan.negated or has_filter or plan.match_all
-            or plan.prox_pairs or plan.word_groups or plan.exact_boost
-            or plan.syn_phrases):
+def _pick_algo(
+    mode: str, plan: "QueryPlan", has_filter: bool, partial_tombs: bool = False
+) -> str:
+    """The one rule for which scorer runs. Only a plain plan (scoring terms
+    alone) can be pruned: a phrase, negation, filter, match_all, proximity,
+    the Last-strategy words bucket, exactness, a phrase synonym or
+    generation-horizon tombstones (per-reader filtering that only the
+    exhaustive scorer applies; compact() restores pruning) runs
+    'exhaustive' whatever ``mode`` asks. A plain plan runs ``mode`` when it
+    names a scorer ('wand' is the classic per-posting heap WAND, the
+    north-rule parity path) and vectorized block-max MaxScore
+    (rank-identical, batch-friendly) under 'auto'."""
+    if (plan.phrases or plan.negated or has_filter or partial_tombs
+            or plan.match_all or plan.prox_pairs or plan.word_groups
+            or plan.exact_boost or plan.syn_phrases):
         return "exhaustive"
-    return "maxscore"
+    return mode if mode in ("wand", "maxscore", "exhaustive") else "maxscore"
+
+
+# Driver budget divisor when WAND runs: the vectorized scorers cost
+# ~0.5-1.2us/posting (measured at 1M docs), so the driver affords 2M
+# postings in ~1-2s; strict doc-at-a-time block-max WAND is a Python pivot
+# loop (~10us/posting), and a 2M-posting driver WAND query would take ~20s
+# where the cluster path takes ~2s.
+_WAND_DRIVER_COST_RATIO = 16
 
 
 @dataclass
@@ -277,16 +294,9 @@ class SearchIndex:
         # execute(execution='auto') runs the query driver-side when the
         # posting slices it touches total at most this many postings
         # (point-read path; ~ms latency). Head terms at web scale exceed it
-        # and fall back to the document-partitioned cluster path.
-        # The budget is per-ALGORITHM cost, not per posting-count alone:
-        # the vectorized scorers (maxscore/exhaustive, ~0.5-1.2us/posting
-        # measured at 1M docs) afford 2M postings in ~1-2s, but strict
-        # doc-at-a-time block-max WAND is a Python pivot loop
-        # (~10us/posting) — a 2M-posting driver WAND query would take ~20s
-        # where the cluster path takes ~2s. execute() divides the budget
-        # by wand_driver_cost_ratio when the resolved algo is 'wand'.
+        # and fall back to the document-partitioned cluster path. A query
+        # WAND scores gets 1/_WAND_DRIVER_COST_RATIO of it (_driver_gate).
         self.driver_exec_max_postings = 2_000_000
-        self.wand_driver_cost_ratio = 16
         # driver point-read dataset handles, created lazily and cached for
         # the handle's lifetime (a SearchIndex is a point-in-time snapshot —
         # meta was read once at init): pyarrow dataset discovery over
@@ -1006,9 +1016,7 @@ class SearchIndex:
                     docids, tfs, dls = docids[m], tfs[m], dls[m]
                 if not len(docids):
                     continue
-                tfs_f = tfs.astype(np.float64)
-                norm = k1 * (1.0 - b + b * dls.astype(np.float64) / max(avgdl, 1e-12))
-                c = wt[row["term"]] * tfs_f / (tfs_f + norm)
+                c = bm25_impact(tfs, dls, avgdl, k1, b, weight=wt[row["term"]])
                 prev = contrib.get(row["term"])
                 contrib[row["term"]] = (
                     (docids, c) if prev is None
@@ -1276,35 +1284,20 @@ class SearchIndex:
         elif filter_ast is not None:
             require_fields(filter_ast, self._doc_stats_ds().schema.names)
 
-        algo = _pick_algo(mode, plan, filter_ast is not None)
-        if self._partial_tombs is not None:
-            # generation-horizon tombstones need per-reader filtering,
-            # which only the exhaustive scorer applies; compact() restores
-            # the pruned paths
-            algo = "exhaustive"
+        algo = _pick_algo(mode, plan, filter_ast is not None,
+                          self._partial_tombs is not None)
         score_fn = make_shard_scorer(
-            term_weights=plan.term_weights,
-            phrases=plan.phrases,
-            negated=plan.negated,
-            k=plan.k + offset,
             block_size=self.config.block_size,
             avgdl=self.avgdl,
             k1=self.config.k1,
             b=self.config.b,
             algo=algo,
-            match_all=plan.match_all,
             has_filter=filter_ast is not None,
             gen_avgdl=self.gen_avgdl,
             deleted=self._deleted_bc,
-            prox_pairs=plan.prox_pairs,
-            prox_weight=plan.prox_weight,
-            prox_gaps=plan.prox_gaps,
-            exact_boost=plan.exact_boost,
-            exact_words=plan.exact_words,
             exact_dl_check=not self.config.field_cols,
-            word_groups=plan.word_groups,
-            syn_phrases=plan.syn_phrases,
             partial_tombs=self._partial_bc,
+            **vars(replace(plan, k=plan.k + offset)),
         )
 
         pq_df = self._postings_for(_plan_terms(plan))
@@ -1333,18 +1326,8 @@ class SearchIndex:
             merged = sorted(
                 ((r["docid"], r["score"]) for r in shard_topk.collect()),
                 key=lambda x: (-x[1], x[0]),
-            )[offset : offset + plan.k]
-            if not merged:
-                return self.spark.createDataFrame([], OUT_SCHEMA)
-            pk_map = self._pk_lookup([d for d, _ in merged])
-            pk_t = self._doc_stats.schema["pk"].dataType.simpleString()
-            return self.spark.createDataFrame(
-                [
-                    (offset + i + 1, int(d), pk_map.get(int(d)), float(s))
-                    for i, (d, s) in enumerate(merged)
-                ],
-                f"rank int, docid long, pk {pk_t}, score double",
-            )
+            )[: offset + plan.k]
+            return self._rows_to_df(self._ranked_rows(merged, offset))
 
         topk = shard_topk.orderBy(F.col("score").desc(), F.col("docid").asc()).limit(
             plan.k + offset
@@ -1423,14 +1406,9 @@ class SearchIndex:
         flt = ds.field("bucket").isin(sorted(set(buckets))) & ds.field(
             "term"
         ).isin(all_terms)
-        tbl = dataset.to_table(filter=flt)
-        readers: dict[str, list[tuple[PostingReader, float]]] = {}
-        for row in tbl.to_pylist():
-            r = PostingReader.from_row(row, self.config.block_size)
-            enc_avgdl = self.gen_avgdl.get(int(row.get("gen", 0)), self.avgdl)
-            scale = max(1.0, self.avgdl / enc_avgdl) if enc_avgdl > 0 else 1.0
-            readers.setdefault(row["term"], []).append((r, scale))
-        return readers
+        return _readers_from_rows(dataset.to_table(filter=flt).to_pylist(),
+                                  self.config.block_size, self.avgdl,
+                                  self.gen_avgdl)
 
     def _doc_stats_ds(self):
         """pyarrow dataset over doc_stats (every generation, dead rows
@@ -1471,10 +1449,11 @@ class SearchIndex:
         """The point-read dispatch rule, shared by ``execute()`` and
         ``search_rows()`` so the two APIs can never diverge on which path a
         query takes: returns driver-scored (rank, docid, pk, score) tuples
-        when the query's total postings fit the algorithm-aware budget
-        (strict WAND is a Python pivot loop, ~wand_driver_cost_ratio x the
-        vectorized scorers' cost/posting) or when execution='driver' forces
-        it; None -> take the cluster path.
+        when the query's total postings fit ``driver_exec_max_postings`` or
+        when execution='driver' forces it; None -> take the cluster path.
+        ``_pick_algo`` decides the scorer once, here; the budget is divided
+        by ``_WAND_DRIVER_COST_RATIO`` only when that scorer is WAND (a
+        Python pivot loop), never for a query that runs exhaustive.
 
         A filtered query is served on the driver when ``sum(df) +
         n_docs_indexed <= driver_exec_max_postings``: the driver scans
@@ -1499,21 +1478,23 @@ class SearchIndex:
                 return None
         all_terms = _plan_terms(plan)
         dfs = self._lookup_exact(all_terms)
+        algo = _pick_algo(mode, plan, expr is not None,
+                          self._partial_tombs is not None)
         budget = self.driver_exec_max_postings
-        if expr is None and _pick_algo(mode, plan, False) == "wand":
-            budget //= self.wand_driver_cost_ratio
+        if algo == "wand":
+            budget //= _WAND_DRIVER_COST_RATIO
         cost = sum(dfs.values()) + (self.n_docs_indexed if expr is not None else 0)
         if execution == "driver" or (execution == "auto" and cost <= budget):
-            return self._execute_driver(plan, mode, offset, all_terms, expr)
+            return self._execute_driver(plan, algo, offset, all_terms, expr)
         return None
 
     def _execute_driver(
-        self, plan: QueryPlan, mode: str, offset: int, all_terms: list[str],
+        self, plan: QueryPlan, algo: str, offset: int, all_terms: list[str],
         filter_expr=None,
     ) -> list[tuple]:
         """Point-read execution: prune to the query's buckets/terms with
-        pyarrow, score in-process with the same _wand_topk/_exhaustive_topk
-        used by the shard UDFs. ``filter_expr`` (``filters.to_arrow``)
+        pyarrow, score in-process through the same ``_topk`` the shard UDFs
+        call, with the scorer ``algo``. ``filter_expr`` (``filters.to_arrow``)
         restricts scoring to ``_allowed_docids``, like the cluster route's
         cogroup with doc_stats. -> (rank, docid, pk, score) tuples; latency
         is ~ms instead of a Spark job (``search_rows`` exposes them without
@@ -1522,35 +1503,18 @@ class SearchIndex:
                    else self._allowed_docids(filter_expr))
         readers = self._readers_for(all_terms)
         deleted = self._deleted if len(self._deleted) else None
-        algo = _pick_algo(mode, plan, allowed is not None)
-        plain = (not plan.phrases and not plan.negated and not plan.match_all
-                 and not plan.prox_pairs and not plan.word_groups
-                 and not plan.exact_boost and not plan.syn_phrases
-                 and self._partial_tombs is None and allowed is None)
-        k = plan.k + offset
-        if algo == "wand" and plain:
-            pairs = _wand_topk(
-                readers, plan.term_weights, k, self.avgdl,
-                self.config.k1, self.config.b, deleted,
-            )
-        elif algo == "maxscore" and plain:
-            pairs = _maxscore_topk(
-                readers, plan.term_weights, k, self.avgdl,
-                self.config.k1, self.config.b, deleted,
-            )
-        else:
-            pairs = _exhaustive_topk(
-                readers, plan.term_weights, plan.phrases, set(plan.negated),
-                allowed, k, self.avgdl, self.config.k1, self.config.b, deleted,
-                match_all=plan.match_all,
-                prox_pairs=plan.prox_pairs, prox_weight=plan.prox_weight,
-                prox_gaps=plan.prox_gaps, exact_boost=plan.exact_boost,
-                exact_words=plan.exact_words,
-                exact_dl_check=not self.config.field_cols,
-                word_groups=plan.word_groups,
-                syn_phrases=plan.syn_phrases,
-                partial_tombs=self._partial_tombs,
-            )
+        pairs = _topk(
+            readers, plan, algo, plan.k + offset, self.avgdl, self.config.k1,
+            self.config.b, deleted, allowed, self._partial_tombs,
+            not self.config.field_cols,
+        )
+        return self._ranked_rows(pairs, offset)
+
+    def _ranked_rows(
+        self, pairs: list[tuple[int, float]], offset: int
+    ) -> list[tuple]:
+        """Top-(offset + k) (docid, score) pairs -> the (rank, docid, pk,
+        score) tuples of the page after ``offset``, pk by ``_pk_lookup``."""
         pairs = pairs[offset:]
         if not pairs:
             return []
@@ -1678,10 +1642,8 @@ class SearchIndex:
                 sel = np.isin(d, docids)
                 if not sel.any():
                     continue
-                tf_f = tf[sel].astype(np.float64)
-                norm = k1 * (1.0 - b + b * dl[sel].astype(np.float64)
-                             / max(self.avgdl, 1e-12))
-                part = weight * tf_f / (tf_f + norm)
+                part = bm25_impact(tf[sel], dl[sel], self.avgdl, k1, b,
+                                   weight=weight)
                 rows.extend(
                     (int(dd), term, float(pp))
                     for dd, pp in zip(d[sel], part)
@@ -1712,20 +1674,19 @@ class SearchIndex:
                     )
         if plan.syn_phrases:
             # phrase-synonym pseudo-terms: mirror _exhaustive_topk's
-            # weight * tf_p/(tf_p+norm) exactly, one '~syn:a-b-c' row per
+            # weighted tf_p impact exactly, one '~syn:a-b-c' row per
             # matching doc, keeping sum(part) == score
             for ph, wt in plan.syn_phrases:
                 pdocs, pcnt, pdls = _phrase_matches(readers, list(ph), pt)
                 if not len(pdocs):
                     continue
                 sel = np.isin(pdocs, docids)
-                tfs_f = pcnt[sel].astype(np.float64)
-                norm = k1 * (1.0 - b + b * pdls[sel]
-                             / max(self.avgdl, 1e-12))
+                part = bm25_impact(pcnt[sel], pdls[sel], self.avgdl, k1, b,
+                                   weight=wt)
                 label = "~syn:" + "-".join(ph)
                 rows.extend(
                     (int(dd), label, float(pp))
-                    for dd, pp in zip(pdocs[sel], wt * tfs_f / (tfs_f + norm))
+                    for dd, pp in zip(pdocs[sel], part)
                 )
         if plan.exact_boost and plan.exact_words:
             # indexed exact words are scoring terms, so `readers` has them;
@@ -1739,33 +1700,19 @@ class SearchIndex:
                 for dd in ed[sel]
             )
         if plan.word_groups:
-            # mirror _exhaustive_topk's Last-strategy fold exactly: the
-            # executed score includes bucket * offset_val, so emit it as a
-            # '~words' component to keep sum(part) == score
-            offset_val = (
-                sum(abs(v) for v in plan.term_weights.values())
-                + abs(plan.prox_weight) * max(1, len(plan.prox_pairs or ()))
-                + abs(plan.exact_boost)
-                + sum(abs(wt) for _ph, wt in (plan.syn_phrases or ()))
-                + 1.0
-            )
+            # the executed score includes bucket * offset_val (_last_fold),
+            # so emit it as a '~words' component to keep sum(part) == score
             term_docs: dict[str, np.ndarray] = {}
             for t in {x for grp in plan.word_groups for x in grp}:
                 chunks = [_live_decode(r, pt)[0]
                           for r, _s in readers.get(t, ())]
                 if chunks:
                     term_docs[t] = np.concatenate(chunks)
-            alive = np.ones(len(docids), dtype=bool)
-            wcnt = np.zeros(len(docids), dtype=np.float64)
-            for grp in plan.word_groups:
-                gdocs = [term_docs[t] for t in grp if t in term_docs]
-                if gdocs:
-                    alive &= np.isin(docids, np.concatenate(gdocs))
-                else:
-                    alive[:] = False
-                if not alive.any():
-                    break
-                wcnt += alive
+            offset_val, wcnt = _last_fold(
+                docids, plan.word_groups, term_docs, plan.term_weights,
+                plan.prox_weight, plan.prox_pairs, plan.exact_boost,
+                plan.syn_phrases,
+            )
             rows.extend(
                 (int(dd), "~words", float(c * offset_val))
                 for dd, c in zip(docids, wcnt) if c > 0
@@ -1947,45 +1894,29 @@ def hybrid_search_rrf(
 
 def make_shard_scorer(
     *,
-    term_weights: dict[str, float],
-    phrases: list[list[str]],
-    negated: list[str],
-    k: int,
     block_size: int,
     avgdl: float,
     k1: float,
     b: float,
     algo: str,
     has_filter: bool,
-    match_all: bool = False,
     gen_avgdl: dict[int, float] | None = None,
     deleted=None,
-    prox_pairs: list[tuple[str, str]] | None = None,
-    prox_weight: float = 0.0,
-    prox_gaps: list[float] | None = None,
-    exact_boost: float = 0.0,
-    exact_words: list[str] | None = None,
     exact_dl_check: bool = True,
-    word_groups: list[list[str]] | None = None,
-    syn_phrases: list[tuple[tuple[str, ...], float]] | None = None,
     partial_tombs=None,
+    **plan_fields,
 ):
-    """Build the per-shard scoring function (cogroup signature).
+    """Build the per-shard scoring function (cogroup signature) for the
+    plan ``QueryPlan(**plan_fields)`` and the scorer ``algo``
+    (``_pick_algo``'s choice).
 
     ``left``: postings rows of this shard for every query term — possibly
     several rows per term (one per segment generation; docids are disjoint
     across generations).
     ``right``: allowed docids (filter), or None when has_filter=False.
     Returns <=k rows (docid, score), ties (score desc, docid asc).
-
-    WAND bound scaling: block-max metadata was computed with the avgdl at
-    that generation's encode time. Scores always use the CURRENT avgdl, and
-    impact(tf, dl, a) grows with a, bounded by impact * (aq/ae) for
-    aq > ae — so each reader's bounds are multiplied by
-    ``max(1, avgdl / gen_avgdl[gen])``, keeping pruning admissible after
-    appends shift the corpus avgdl.
     """
-    neg_set = set(negated)
+    plan = QueryPlan(**plan_fields)
     gen_avgdl = gen_avgdl or {}
     # `deleted` is either a plain sorted np.ndarray (tests / driver reuse)
     # or a pyspark Broadcast of one: a Broadcast pickles as a tiny handle,
@@ -1993,7 +1924,6 @@ def make_shard_scorer(
     # task closure. Resolve lazily inside the scorer (executor-side).
     if deleted is not None and isinstance(deleted, np.ndarray) and not len(deleted):
         deleted = None
-    prox_pairs = prox_pairs or []
 
     def _empty() -> pd.DataFrame:
         return pd.DataFrame(
@@ -2008,13 +1938,8 @@ def make_shard_scorer(
             tomb = None
         pt = (partial_tombs.value if hasattr(partial_tombs, "value")
               else partial_tombs)
-        readers: dict[str, list[tuple[PostingReader, float]]] = {}
-        for row in left.to_dict("records"):
-            r = PostingReader.from_row(row, block_size)
-            enc_avgdl = gen_avgdl.get(int(row.get("gen", 0)), avgdl)
-            scale = max(1.0, avgdl / enc_avgdl) if enc_avgdl > 0 else 1.0
-            readers.setdefault(row["term"], []).append((r, scale))
-
+        readers = _readers_from_rows(left.to_dict("records"), block_size,
+                                     avgdl, gen_avgdl)
         allowed: np.ndarray | None = None
         if has_filter:
             allowed = (
@@ -2023,23 +1948,8 @@ def make_shard_scorer(
                 else np.zeros(0, dtype=np.int64)
             )
 
-        plain = (not phrases and not neg_set and allowed is None
-                 and not match_all and not prox_pairs and not word_groups
-                 and not exact_boost and not syn_phrases and pt is None)
-        if algo == "wand" and plain:
-            pairs = _wand_topk(readers, term_weights, k, avgdl, k1, b, tomb)
-        elif algo == "maxscore" and plain:
-            pairs = _maxscore_topk(readers, term_weights, k, avgdl, k1, b, tomb)
-        else:
-            pairs = _exhaustive_topk(
-                readers, term_weights, phrases, neg_set, allowed, k, avgdl, k1, b,
-                tomb, match_all=match_all,
-                prox_pairs=prox_pairs, prox_weight=prox_weight,
-                prox_gaps=prox_gaps, exact_boost=exact_boost,
-                exact_words=exact_words, exact_dl_check=exact_dl_check,
-                word_groups=word_groups, syn_phrases=syn_phrases,
-                partial_tombs=pt,
-            )
+        pairs = _topk(readers, plan, algo, plan.k, avgdl, k1, b, tomb,
+                      allowed, pt, exact_dl_check)
         if not pairs:
             return _empty()
         d, s = zip(*pairs)
@@ -2048,6 +1958,101 @@ def make_shard_scorer(
         )
 
     return scorer
+
+
+def _readers_from_rows(
+    rows: Iterable[dict], block_size: int, avgdl: float,
+    gen_avgdl: dict[int, float],
+) -> dict[str, list[tuple[PostingReader, float]]]:
+    """Postings rows -> term -> [(reader, bound scale)], one reader per
+    segment generation.
+
+    Bound scaling: block-max metadata was computed with the avgdl at that
+    generation's encode time. Scores always use the CURRENT avgdl, and
+    impact(tf, dl, a) grows with a, bounded by impact * (aq/ae) for
+    aq > ae — so each reader's bounds are multiplied by
+    ``max(1, avgdl / gen_avgdl[gen])``, keeping WAND/MaxScore pruning
+    admissible after appends shift the corpus avgdl."""
+    readers: dict[str, list[tuple[PostingReader, float]]] = {}
+    for row in rows:
+        r = PostingReader.from_row(row, block_size)
+        enc_avgdl = gen_avgdl.get(int(row.get("gen", 0)), avgdl)
+        scale = max(1.0, avgdl / enc_avgdl) if enc_avgdl > 0 else 1.0
+        readers.setdefault(row["term"], []).append((r, scale))
+    return readers
+
+
+def _topk(
+    readers: dict[str, list[tuple[PostingReader, float]]],
+    plan: QueryPlan,
+    algo: str,
+    k: int,
+    avgdl: float,
+    k1: float,
+    b: float,
+    deleted: np.ndarray | None,
+    allowed: np.ndarray | None,
+    partial_tombs: tuple | None,
+    exact_dl_check: bool,
+) -> list[tuple[int, float]]:
+    """The one scorer entry of the driver and cluster routes: top-``k``
+    (docid, score) of ``plan`` over ``readers`` with the scorer ``algo``
+    chosen by ``_pick_algo`` (which sends every non-plain plan to
+    'exhaustive')."""
+    if algo == "wand":
+        return _wand_topk(readers, plan.term_weights, k, avgdl, k1, b, deleted)
+    if algo == "maxscore":
+        return _maxscore_topk(readers, plan.term_weights, k, avgdl, k1, b,
+                              deleted)
+    return _exhaustive_topk(
+        readers, plan.term_weights, plan.phrases, set(plan.negated), allowed,
+        k, avgdl, k1, b, deleted, match_all=plan.match_all,
+        prox_pairs=plan.prox_pairs, prox_weight=plan.prox_weight,
+        prox_gaps=plan.prox_gaps, exact_boost=plan.exact_boost,
+        exact_words=plan.exact_words, exact_dl_check=exact_dl_check,
+        word_groups=plan.word_groups, syn_phrases=plan.syn_phrases,
+        partial_tombs=partial_tombs,
+    )
+
+
+def _last_fold(
+    docids: np.ndarray,
+    word_groups: list[list[str]],
+    term_docs: dict[str, np.ndarray],
+    term_weights: dict[str, float],
+    prox_weight: float = 0.0,
+    prox_pairs: list[tuple[str, str]] | None = None,
+    exact_boost: float = 0.0,
+    syn_phrases: list[tuple[tuple[str, ...], float]] | None = None,
+) -> tuple[float, np.ndarray]:
+    """Last strategy (the reference's words rule, see
+    ``QueryPlan.word_groups``) -> (offset_val, per-doc bucket count over
+    ``docids``). The bucket is the
+    longest matched prefix of query words; a word matches through any of
+    its group's terms (``term_docs``: term -> docids holding it). Scorers
+    fold it as score += bucket * offset_val with offset_val > max possible
+    bm25 + prox + exactness + phrase-synonym sum, so (bucket desc, bm25
+    desc) == plain score sort and the shard merge / pagination stay
+    untouched."""
+    offset_val = (
+        sum(abs(v) for v in term_weights.values())
+        + abs(prox_weight) * max(1, len(prox_pairs or ()))
+        + abs(exact_boost)
+        + sum(abs(wt) for _ph, wt in (syn_phrases or ()))
+        + 1.0
+    )
+    alive = np.ones(len(docids), dtype=bool)
+    wcnt = np.zeros(len(docids), dtype=np.float64)
+    for grp in word_groups:
+        gdocs = [term_docs[t] for t in grp if t in term_docs]
+        if gdocs:
+            alive &= np.isin(docids, np.concatenate(gdocs))
+        else:  # unindexed word: no doc can extend the prefix past it
+            alive[:] = False
+        if not alive.any():
+            break
+        wcnt += alive
+    return offset_val, wcnt
 
 
 def _exhaustive_topk(
@@ -2086,10 +2091,8 @@ def _exhaustive_topk(
         t_docs = []
         for r, _scale in readers.get(term, ()):  # scores use current avgdl
             docids, tfs, dls = _live_decode(r, partial_tombs)
-            tfs_f = tfs.astype(np.float64)
-            norm = k1 * (1.0 - b + b * dls.astype(np.float64) / max(avgdl, 1e-12))
             doc_chunks.append(docids)
-            score_chunks.append(idf * tfs_f / (tfs_f + norm))
+            score_chunks.append(bm25_impact(tfs, dls, avgdl, k1, b, weight=idf))
             t_docs.append(docids)
         if match_all:
             per_term_docs.append(
@@ -2099,16 +2102,15 @@ def _exhaustive_topk(
             term_docs[term] = np.concatenate(t_docs)
     # phrase-synonym pseudo-terms (QueryPlan.syn_phrases spec): docs
     # matching ONLY the phrase still become candidates (appended with a
-    # zero base score), then receive weight * tf_p/(tf_p + norm)
+    # zero base score), then receive the weighted impact of tf_p
     syn_data: list[tuple[np.ndarray, np.ndarray]] = []
     if syn_phrases:
         for ph, wt in syn_phrases:
             pdocs, pcnt, pdls = _phrase_matches(readers, list(ph),
                                                 partial_tombs)
             if len(pdocs):
-                tfs_f = pcnt.astype(np.float64)
-                norm = k1 * (1.0 - b + b * pdls / max(avgdl, 1e-12))
-                syn_data.append((pdocs, wt * tfs_f / (tfs_f + norm)))
+                syn_data.append(
+                    (pdocs, bm25_impact(pcnt, pdls, avgdl, k1, b, weight=wt)))
                 doc_chunks.append(pdocs)
                 score_chunks.append(np.zeros(len(pdocs), dtype=np.float64))
     if not doc_chunks:
@@ -2166,30 +2168,10 @@ def _exhaustive_topk(
     if len(uniq) == 0:
         return []
     if word_groups:
-        # Last strategy (reference words rule, ranking/words.rs:52-80):
-        # bucket = longest matched prefix of query words; a word matches
-        # through any of its group's terms. Folded as
-        # score += bucket * offset with offset > max possible bm25 + prox
-        # sum, so (bucket desc, bm25 desc) == plain score sort and the
-        # shard merge / pagination stay untouched.
-        offset_val = (
-            sum(abs(v) for v in term_weights.values())
-            + abs(prox_weight) * max(1, len(prox_pairs or ()))
-            + abs(exact_boost)
-            + sum(abs(wt) for _ph, wt in (syn_phrases or ()))
-            + 1.0
+        offset_val, wcnt = _last_fold(
+            uniq, word_groups, term_docs, term_weights, prox_weight,
+            prox_pairs, exact_boost, syn_phrases,
         )
-        alive = np.ones(len(uniq), dtype=bool)
-        wcnt = np.zeros(len(uniq), dtype=np.float64)
-        for grp in word_groups:
-            gdocs = [term_docs[t] for t in grp if t in term_docs]
-            if gdocs:
-                alive &= np.isin(uniq, np.concatenate(gdocs))
-            else:  # unindexed word: no doc can extend the prefix past it
-                alive[:] = False
-            if not alive.any():
-                break
-            wcnt += alive
         agg = agg + wcnt * offset_val
     kk = min(k, len(uniq))
     idx = np.lexsort((uniq, -agg))[:kk]
@@ -2535,13 +2517,15 @@ class _Cursor:
     """Block-skipping cursor over one term's shard postings. Blocks are
     decoded lazily; ``seek`` skips whole blocks via max_docid metadata."""
 
-    __slots__ = ("r", "idf", "bi", "i", "docids", "tfs", "dls", "exhausted",
-                 "term_ub", "scale")
+    __slots__ = ("r", "idf", "bi", "i", "docids", "scores", "exhausted",
+                 "term_ub", "scale", "bm25")
 
-    def __init__(self, reader: PostingReader, idf: float, scale: float = 1.0):
+    def __init__(self, reader: PostingReader, idf: float, scale: float,
+                 avgdl: float, k1: float, b: float):
         self.r = reader
         self.idf = idf
         self.scale = scale  # avgdl-drift bound multiplier (>= 1, admissible)
+        self.bm25 = (avgdl, k1, b)
         self.exhausted = reader.n_docs == 0
         self.term_ub = (
             float(idf * scale * reader.max_impact.max()) if not self.exhausted else 0.0
@@ -2551,7 +2535,8 @@ class _Cursor:
 
     def _load(self, bi: int):
         self.bi = bi
-        self.docids, self.tfs, self.dls = self.r.decode_block(bi)
+        self.docids, tfs, dls = self.r.decode_block(bi)
+        self.scores = bm25_impact(tfs, dls, *self.bm25, weight=self.idf)
         self.i = 0
 
     @property
@@ -2638,9 +2623,7 @@ def _maxscore_topk(
             if deleted is not None and len(deleted):
                 keep = ~np.isin(docids, deleted)
                 docids, tfs, dls = docids[keep], tfs[keep], dls[keep]
-            tfs_f = tfs.astype(np.float64)
-            norm = k1 * (1.0 - b + b * dls.astype(np.float64) / max(avgdl, 1e-12))
-            yield docids, idf * tfs_f / (tfs_f + norm)
+            yield docids, bm25_impact(tfs, dls, avgdl, k1, b, weight=idf)
 
     uniq = np.zeros(0, dtype=np.int64)
     agg = np.zeros(0, dtype=np.float64)
@@ -2698,11 +2681,8 @@ def _maxscore_topk(
                     if not hit.any():
                         continue
                     hp = pos[hit]
-                    tfs_f = tf_b[hp].astype(np.float64)
-                    norm = k1 * (
-                        1.0 - b + b * dl_b[hp].astype(np.float64) / max(avgdl, 1e-12)
-                    )
-                    cscore[grp[hit]] += idf * tfs_f / (tfs_f + norm)
+                    cscore[grp[hit]] += bm25_impact(tf_b[hp], dl_b[hp], avgdl,
+                                                    k1, b, weight=idf)
         if deleted is not None and len(deleted) and len(cand):
             keepd = ~np.isin(cand, deleted)
             cand, cscore = cand[keepd], cscore[keepd]
@@ -2734,19 +2714,12 @@ def _wand_topk(
     are skipped at insert time (bounds only over-estimate — admissible).
     """
     cursors = [
-        _Cursor(r, idf, scale)
+        _Cursor(r, idf, scale, avgdl, k1, b)
         for t, idf in term_weights.items()
         for r, scale in readers.get(t, ())
     ]
     cursors = [c for c in cursors if not c.exhausted]
     heap: list[tuple[float, int]] = []
-
-    inv_avgdl = 1.0 / max(avgdl, 1e-12)
-
-    def score_at(c: _Cursor) -> float:
-        tf = float(c.tfs[c.i])
-        norm = k1 * (1.0 - b + b * float(c.dls[c.i]) * inv_avgdl)
-        return c.idf * tf / (tf + norm)
 
     while True:
         cursors = [c for c in cursors if not c.exhausted]
@@ -2797,7 +2770,7 @@ def _wand_topk(
             if not is_deleted:
                 s = 0.0
                 for c in at_pivot:
-                    s += score_at(c)
+                    s += float(c.scores[c.i])
                 entry = (s, -pivot_doc)
                 if len(heap) < k:
                     heapq.heappush(heap, entry)

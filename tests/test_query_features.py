@@ -690,3 +690,31 @@ def test_search_many_empty_results_keep_caller_qid_type(search_index):
     assert hit.unionByName(empty_union).count() == hit.count()
     str_empty = search_index.search_many([("s", "zzqq vvrr")], k=3)
     assert str_empty.schema["query_id"].dataType.simpleString() == "string"
+
+
+@pytest.mark.parametrize("q", ['"search engine"', "search -engine"])
+def test_wand_mode_keeps_driver_budget_when_exhaustive_runs(
+        spark, index_dir, monkeypatch, q):
+    """A phrase or a negation runs the exhaustive scorer whatever the mode,
+    so mode='wand' must not cut the query's driver budget by the WAND cost
+    ratio: at a budget of exactly sum(df) it stays on the driver route and
+    returns the cluster route's rows."""
+    from search_engine_spark.query import SearchIndex, _plan_terms
+
+    ix = SearchIndex(spark, index_dir)
+    plan = ix.plan(q, 10)
+    cost = sum(ix._lookup_exact(_plan_terms(plan)).values())
+    assert cost >= 16
+    ix.driver_exec_max_postings = cost
+    calls = []
+    driver = ix._execute_driver
+
+    def spy(*args, **kwargs):
+        calls.append(args)
+        return driver(*args, **kwargs)
+
+    monkeypatch.setattr(ix, "_execute_driver", spy)
+    rows = ix.search_rows(q, k=10, mode="wand")
+    assert len(calls) == 1, "query left the driver route"
+    assert rows == [r.asDict() for r in ix.search(
+        q, k=10, mode="wand", execution="cluster").collect()]

@@ -339,6 +339,31 @@ def test_pq_encode_matches_numpy_argmin(spark):
     assert [r["adist"] for r in top] == sorted(r["adist"] for r in top)
 
 
+def test_pq_encode_rejects_empty_input(spark):
+    from search_engine_spark.pipelines.similarity import pq_encode
+
+    schema = "vec_id long, embedding array<double>"
+    emb = spark.createDataFrame([], schema)
+    cb = spark.createDataFrame([], "sub int, code int, svec array<double>")
+    with pytest.raises(ValueError, match="empty input"):
+        pq_encode(emb, cb, m=4)
+
+
+def test_pq_encode_rejects_dim_not_divisible_by_m(spark):
+    from search_engine_spark.pipelines.similarity import (
+        pq_codebooks, pq_encode,
+    )
+
+    schema = "vec_id long, embedding array<double>"
+    emb8 = spark.createDataFrame(
+        [(i, [float(i + j) for j in range(8)]) for i in range(8)], schema)
+    cb = pq_codebooks(emb8, m=4, n_codes=2)
+    emb6 = spark.createDataFrame(
+        [(i, [float(i + j) for j in range(6)]) for i in range(8)], schema)
+    with pytest.raises(ValueError, match="not divisible"):
+        pq_encode(emb6, cb, m=4)
+
+
 def test_ivf_pq_topk_candidates_from_probed_lists_only(spark):
     import numpy as np
 

@@ -18,9 +18,10 @@ Pipeline (each stage checkpointed, see ``index.py``):
 3. ``doc_stats`` — (docid, pk, dl, attrs) + scalars N/avgdl (reference P4
    generalized to exact doc lengths — the data BM25 needs and the reference
    discards).
-4. ``terms``     — global dictionary (term, term_id, df, cf, max_tf)
-   (reference words FST, ``src/index.rs:56``). df is computed globally
-   BEFORE sharding, so BM25 idf is exact regardless of salting.
+4. ``terms``     — global dictionary (term, df, cf, max_tf), sorted by term
+   within each file (reference words FST, ``src/index.rs:56``). df is
+   computed globally BEFORE sharding, so BM25 idf is exact regardless of
+   salting.
 5. ``postings``  — per term-bucket: ``groupBy(shard[, tsalt]).applyInArrow``
    merges each term's sorted runs and encodes sorted-docid delta+varint
    blocks with block-max metadata (reference P2 ``extract_word_docids.rs``
@@ -28,10 +29,11 @@ Pipeline (each stage checkpointed, see ``index.py``):
    ``shard = docid % num_shards`` is the skew salt: a head term's postings
    split into num_shards bounded groups, and query-time scoring is
    document-partitioned (per-shard top-k + global merge). At large corpora
-   an additional term-hash salt ``tsalt`` (config.encode_salt, auto-sized)
-   subdivides each shard group so the encode task grain stays
-   ~encode_group_postings postings — segments are byte-identical either
-   way since a (term, shard) posting list never crosses groups.
+   an additional term-hash salt ``tsalt`` (sized from the extract stage's
+   postings count) subdivides each shard group so the encode task grain
+   stays ~config.encode_group_postings postings — segments are
+   byte-identical either way since a (term, shard) posting list never
+   crosses groups.
 6. ``finalize``  — meta.json commit (the "snapshot publish").
 
 Full-data exchanges in the whole build: the stage-1 range shuffle and the
@@ -161,7 +163,9 @@ def doc_lengths(term_doc: DataFrame) -> DataFrame:
 
 
 def terms_agg(term_doc: DataFrame) -> DataFrame:
-    """Global (term, df, cf, max_tf) dictionary aggregation.
+    """Global (term, df, cf, max_tf) dictionary in its persisted shape,
+    sorted by term within each partition so every written file's row-group
+    min/max on ``term`` prunes dictionary point and prefix reads.
 
     Pure scalar groupBy over the per-run df/cf/max_tf the extract kernel
     emitted — column pruning skips the posting blobs entirely, so this
@@ -174,6 +178,7 @@ def terms_agg(term_doc: DataFrame) -> DataFrame:
             F.sum("cf").alias("cf"),
             F.max("max_tf").alias("max_tf"),
         )
+        .sortWithinPartitions("term")
     )
 
 
@@ -199,23 +204,19 @@ def _offset_lookup(offsets: dict[int, int]):
     )
 
 
-def assign_docids(
-    df: DataFrame, pk_col: str, n_parts: int = 32, return_count: bool = False,
-    out_col: str = "docid", return_handle: bool = False,
-):
-    """``out_col`` = global 0-based rank of pk. Scalable two-pass: range-sort,
+def assign_docids(df: DataFrame, pk_col: str) -> tuple[DataFrame, DataFrame]:
+    """-> (``df`` plus ``docid`` = global 0-based rank of pk, persisted
+    handle). Scalable two-pass: range-sort into one partition per core,
     count rows per physical partition, rank within partition plus the
     partition's cumulative offset (an array-literal lookup — see
-    ``_offset_lookup``). Also ranks the term dictionary (out_col='term_id')
-    past the single-task window threshold (config.term_window_max_terms).
+    ``_offset_lookup``).
 
     Deterministic for unique pks at any parallelism: ranks depend only on the
     total order of pk, not on where partition boundaries land. The sorted df
-    is persisted so the count pass and the rank pass see the same partitions.
-
-    ``return_count=True`` also returns the total row count (free by-product
-    of the offsets pass — saves callers a separate count job).
+    is persisted so the count pass and the rank pass see the same partitions;
+    the caller unpersists the returned handle once the ranks are written.
     """
+    n_parts = df.sparkSession.sparkContext.defaultParallelism
     d = df.repartitionByRange(n_parts, F.col(pk_col)).sortWithinPartitions(pk_col)
     d = d.withColumn("_pid", F.spark_partition_id())
     d.persist()
@@ -228,16 +229,12 @@ def assign_docids(
     w = Window.partitionBy("_pid").orderBy(pk_col)
     out = (
         d.withColumn(
-            out_col,
+            "docid",
             F.row_number().over(w) + _offset_lookup(offsets) - F.lit(1),
         )
         .drop("_pid")
     )
-    # persist released by caller via unpersist/clearCache after
-    # materializing (or via the returned handle with return_handle=True)
-    if return_handle:
-        return (out, acc, d) if return_count else (out, d)
-    return (out, acc) if return_count else out
+    return out, d
 
 
 def dedupe_and_rank(
@@ -264,7 +261,7 @@ def dedupe_and_rank(
     parquet write of the sorted run (with _mid2/_pid already materialized
     in the files): every later job reads immutable bytes, so there is no
     eviction/resample window at all and no storage-pool pressure — the
-    scale path (config.stage1_staging; the caller removes the directory
+    scale path (see ``_stage1_staging_dir``; the caller removes the directory
     when stage 1 completes).
 
     ``out_cols`` is ``[(src_name, out_name), ...]``; docid is prepended.
@@ -982,16 +979,11 @@ def _input_bytes(df: DataFrame) -> int | None:
 def _stage1_staging_dir(
     pages: DataFrame, config: IndexConfig, index_dir: str
 ) -> str | None:
-    """Resolve config.stage1_staging ('auto'|'cache'|'parquet') to a
-    staging path or None (= cache). 'auto' stages to parquet when the
-    input's on-disk size is unknown (non-file-backed — could be huge) or
-    exceeds stage1_cache_max_bytes — the measured cache-pressure switch
-    point (config.py) — and caches small file-backed inputs."""
-    mode = config.stage1_staging
-    if mode == "cache":
-        return None
-    if mode == "parquet":
-        return os.path.join(index_dir, "_staging_sorted_run")
+    """Staging path for the stage-1 sorted run, or None (= cache pin).
+    Stages to parquet when the input's on-disk size is unknown
+    (non-file-backed — could be huge) or exceeds stage1_cache_max_bytes —
+    the measured cache-pressure switch point (config.py) — and caches
+    small file-backed inputs."""
     size = _input_bytes(pages)
     # unknown size (non-file-backed input) takes the safe parquet path:
     # it could be arbitrarily large and the persist path degrades ~1.7x
@@ -1150,7 +1142,7 @@ def build_index(
             if extra and extra not in keep:
                 keep.append(extra)
         n_docs = None
-        stage1_staging = None
+        sorted_run_dir = None
         snap_names = {dst for _, dst in search_src}
         out_cols = [(config.pk_col, "pk"), *search_src] + [
             (c, c) for c in config.attr_cols if c not in snap_names
@@ -1194,11 +1186,11 @@ def build_index(
                 docid_col_pinned = True
         else:
             n_parts = _stage1_partitions(spark, pages, config)
-            stage1_staging = _stage1_staging_dir(pages, config, index_dir)
+            sorted_run_dir = _stage1_staging_dir(pages, config, index_dir)
             t_sub = time.time()
             docs, n_docs = dedupe_and_rank(
                 pages.select(*keep), config.pk_col, config.ts_col,
-                out_cols, n_parts, staging_dir=stage1_staging,
+                out_cols, n_parts, staging_dir=sorted_run_dir,
                 walls=sub_walls,
             )
             sub_walls["dedupe_rank"] = round(time.time() - t_sub, 2)
@@ -1291,10 +1283,10 @@ def build_index(
                             "sub_walls": sub_walls},
                    wall_s=time.time() - t0)
         spark.catalog.clearCache()
-        if stage1_staging is not None:
+        if sorted_run_dir is not None:
             import shutil as _shutil
 
-            _shutil.rmtree(stage1_staging, ignore_errors=True)
+            _shutil.rmtree(sorted_run_dir, ignore_errors=True)
         if run_extract_fused:
             # extract committed strictly AFTER docs: a crash between the
             # two leaves docs committed + extract pending, and the resume
@@ -1355,40 +1347,14 @@ def build_index(
     # ---- stage 4: terms dictionary --------------------------------------
     if not log.done("terms"):
         t0 = time.time()
-        terms = terms_agg(term_doc)
-        # term_id = rank in term order. The dictionary is orders of magnitude
-        # smaller than the corpus (the reference holds its whole words FST in
-        # memory, src/index.rs:56), so a single-task global window is the
-        # right cost/complexity point up to term_window_max_terms (10M);
-        # beyond that — or when forced via config.term_rank_mode='rank' —
-        # the build uses the same scalable two-pass range rank as docids.
-        mode = config.term_rank_mode
-        n_terms_known: int | None = None
-        if mode == "auto":
-            terms = terms.persist()
-            n_terms_known = terms.count()
-            use_window = n_terms_known <= config.term_window_max_terms
-        else:
-            use_window = mode == "window"
-        if use_window:
-            w = Window.orderBy("term")
-            terms = terms.withColumn(
-                "term_id", F.row_number().over(w) - F.lit(1)
-            )
-        else:
-            n_rank_parts = max(spark.sparkContext.defaultParallelism, 8)
-            terms = assign_docids(
-                terms, "term", n_parts=n_rank_parts, out_col="term_id"
-            )
         obs = Observation()
-        terms = terms.observe(obs, F.count(F.lit(1)).alias("rows"))
+        terms = terms_agg(term_doc).observe(
+            obs, F.count(F.lit(1)).alias("rows")
+        )
         os.makedirs(paths.terms, exist_ok=True)
         staging, commit = staged_write(paths.gen_dir(paths.terms, 0))
-        terms.select("term", "term_id", "df", "cf", "max_tf").write.mode(
-            "overwrite"
-        ).parquet(staging)
+        terms.write.mode("overwrite").parquet(staging)
         commit()
-        spark.catalog.clearCache()
         log.commit("terms", inputs={"term_doc": "extract"},
                    metrics={"n_terms": int(obs.get["rows"])},
                    wall_s=time.time() - t0)
@@ -1405,14 +1371,14 @@ def build_index(
         lineage_dir=os.path.join(paths.metrics, f"tasks-{build_id}"),
     )
     os.makedirs(paths.gen_dir(paths.postings, 0), exist_ok=True)
-    # Term-salt factor for the encode groups (see IndexConfig.encode_salt):
+    # Term-salt factor for the encode groups (see IndexConfig):
     # sized so one group ~ encode_group_postings postings. A term's whole
     # (term, shard) posting list stays inside one group (salt is a pure
     # term hash), so segments are byte-identical to the unsalted build.
     n_postings_total = int(
         log.read("extract")["metrics"].get("n_postings") or 0
     )
-    enc_salt = config.encode_salt or max(1, min(64, -(
+    enc_salt = max(1, min(64, -(
         -n_postings_total
         // (config.num_buckets * config.num_shards
             * config.encode_group_postings)

@@ -94,53 +94,28 @@ class IndexConfig:
     # stage must not inherit the input's file-layout partitioning)
     extract_partitions: int | None = None
 
-    # Encode-group term salt: split every (bucket, shard) postings encode
-    # group into G term-hash subgroups, bounding the unit of postings-stage
-    # work to ~encode_group_postings postings regardless of corpus size.
-    # Without it the stage's parallel grain is num_buckets x num_shards
-    # whole groups hashed into shuffle partitions — at 16 shards a third of
-    # the tasks carry 2-3 whole groups (hash collisions) and the stage wall
-    # is a multi-group straggler, which caps measured 2->8 core scaling.
-    # None -> auto from the extract stage's measured postings count (1 at
-    # small corpora: identical plans, zero extra files); int forces G.
-    encode_salt: int | None = None
+    # Encode-group term salt: every (bucket, shard) postings encode group
+    # splits into G term-hash subgroups, G sized from the extract stage's
+    # postings count so one group holds ~encode_group_postings postings
+    # (G = 1 at small corpora: identical plans, zero extra files). Without
+    # it the stage's parallel grain is num_buckets x num_shards whole
+    # groups hashed into shuffle partitions — at 16 shards a third of the
+    # tasks carry 2-3 whole groups (hash collisions) and the stage wall is
+    # a multi-group straggler, which caps measured 2->8 core scaling.
     encode_group_postings: int = 1_500_000
 
     k1: float = BM25_K1
     b: float = BM25_B
 
-    # Stage-1 sorted-run materialization. 'cache' pins the deduped sorted
-    # run with .persist() (fastest when it fits executor storage);
-    # 'parquet' writes it to a staging directory and re-reads files —
-    # immune to cache eviction/resampling and to storage-pool pressure.
-    # 'auto' picks parquet when the input's on-disk size is unknown or
-    # exceeds stage1_cache_max_bytes. MEASURED switch point (SURVEY §9.3):
-    # at 4M docs / 24g driver the deserialized cache (~12-16 GB) exceeds
-    # the storage pool and the build degrades ~1.7x; the staging write
-    # costs one extra sequential parquet pass and holds flat.
-    stage1_staging: str = "auto"  # 'auto' | 'cache' | 'parquet'
+    # Stage-1 sorted-run materialization: inputs whose on-disk size is
+    # unknown (not file-backed) or above this many bytes pin the deduped
+    # sorted run as a staging parquet write (immune to cache eviction and
+    # storage-pool pressure); smaller file-backed inputs pin it with
+    # .persist(). MEASURED switch point (SURVEY §9.3): at 4M docs / 24g
+    # driver the deserialized cache (~12-16 GB) exceeds the storage pool
+    # and the build degrades ~1.7x; the staging write costs one extra
+    # sequential parquet pass and holds flat.
     stage1_cache_max_bytes: int = 2 << 30
-
-    # append docid assignment (add_documents, rank-assigned path). A batch
-    # gets docids by rank-of-pk; the single-task window is the right
-    # cost point for normal appends, but a huge backfill batch would
-    # silently serialize on one task — past append_window_max_docs the
-    # append switches to the same scalable two-pass range rank used for
-    # build docids (assign_docids). 'auto' counts the deduped batch (one
-    # cheap scan of the append's SMALL side) and picks.
-    append_rank_mode: str = "auto"  # 'auto' | 'window' | 'rank'
-    append_window_max_docs: int = 5_000_000
-
-    # term_id assignment (build stage 4). The dictionary is orders of
-    # magnitude smaller than the corpus, so a single-task global window
-    # rank is the right cost/complexity point for most indexes; past
-    # term_window_max_terms the build switches to the same scalable
-    # two-pass range rank used for docids (assign_docids: range shuffle,
-    # per-partition counts, offset-literal rank). 'auto' counts the
-    # dictionary (cheap: the aggregated frame is persisted for the write
-    # anyway) and picks; 'window' / 'rank' force a path.
-    term_rank_mode: str = "auto"  # 'auto' | 'window' | 'rank'
-    term_window_max_terms: int = 10_000_000
 
     # salting threshold is implicit: sharding is unconditional (uniform by
     # docid), which bounds every (term, shard) group to ~df/num_shards.
@@ -161,7 +136,7 @@ class IndexConfig:
 
     @staticmethod
     def from_dict(d: dict) -> "IndexConfig":
-        d = dict(d)
+        d = {k: v for k, v in d.items() if k not in RETIRED_CONFIG_FIELDS}
         d["attr_cols"] = tuple(d.get("attr_cols", ()))
         d["field_cols"] = tuple(
             (str(c), int(w)) for c, w in d.get("field_cols", ())
@@ -169,13 +144,24 @@ class IndexConfig:
         return IndexConfig(**d)
 
 
+# Build-path selectors that meta.json files of earlier indexes still carry.
+# from_dict drops exactly these, so those indexes keep opening while any
+# other unknown key still raises.
+RETIRED_CONFIG_FIELDS = frozenset(
+    {
+        "term_rank_mode", "term_window_max_terms", "append_rank_mode",
+        "append_window_max_docs", "stage1_staging", "encode_salt",
+    }
+)
+
+
 # IndexConfig fields whose change alters what the extract stage produces —
 # a settings diff touching any of these requires a reindex (reference
 # ``Settings::execute`` decides the same way, ``src/update/settings.rs:865+``:
 # searchable/filterable attribute changes re-run extraction, query-time
-# settings like synonyms/typo just commit). Tuning knobs (stage1_*,
-# term_rank_*, extract_partitions) change HOW the build runs, not what it
-# produces, so they rewrite meta only.
+# settings like synonyms/typo just commit). Tuning knobs
+# (extract_partitions, encode_group_postings, stage1_cache_max_bytes) change
+# HOW the build runs, not what it produces, so they rewrite meta only.
 EXTRACTION_AFFECTING = frozenset(
     {
         "text_col", "field_cols", "pk_col", "ts_col", "docid_col",

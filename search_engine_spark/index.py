@@ -12,10 +12,11 @@ index_dir/
                          #   field_id_word_count_docids (src/index.rs:124-125)
   term_doc/gen=G/bucket=*/   # extraction spill: (term, shard, docid, tf, dl,
                          #   positions) — the checkpointed intermediate
-  terms/gen=G/           # per-generation dictionary: (term, term_id, df, cf,
-                         #   max_tf) == words FST (src/index.rs:56) + the
-                         #   df/tf stats the reference never stores; query
-                         #   merges generations by summing df/cf
+  terms/gen=G/           # per-generation dictionary: (term, df, cf, max_tf),
+                         #   term-sorted per file == words FST
+                         #   (src/index.rs:56) + the df/tf stats the
+                         #   reference never stores; query merges
+                         #   generations by summing df/cf
   postings/gen=G/bucket=*/   # segments: (term, shard, n_docs, docs, tfs,
                          #   dls, poss, block_meta) == word_docids
                          #   (src/index.rs:110-111) re-encoded per north rule

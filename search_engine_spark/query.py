@@ -428,7 +428,9 @@ class SearchIndex:
         if "horizon" in t.column_names:
             hor = t.column("horizon").to_numpy().astype(np.int64)
         else:
-            hor = np.full(len(ids), (1 << 31) - 1, dtype=np.int64)
+            from search_engine_spark.update import DEAD_HORIZON
+
+            hor = np.full(len(ids), DEAD_HORIZON, dtype=np.int64)
         order = np.argsort(ids, kind="stable")
         ids, hor = ids[order], hor[order]
         # fold duplicate docids to max(horizon)
@@ -1748,10 +1750,12 @@ class SearchIndex:
         Distributed: postings rows for the phrase terms (bucket-pruned scan)
         group by shard; each shard's pandas UDF decodes positions and
         intersects — documents are disjoint across shards so results union.
+        Tombstoned documents are dropped (generation-horizon and full).
         """
         phrase = [t for t in phrase]
         pq_df = self._postings_for(sorted(set(phrase)))
         block_size = self.config.block_size  # capture scalars, not self
+        dead_bc, part_bc = self._deleted_bc, self._partial_bc
 
         def match(pdf: pd.DataFrame) -> pd.DataFrame:
             readers: dict[str, list[tuple[PostingReader, float]]] = {}
@@ -1759,7 +1763,10 @@ class SearchIndex:
                 readers.setdefault(row["term"], []).append(
                     (PostingReader.from_row(row, block_size), 1.0)
                 )
-            docs = _phrase_docids(readers, phrase)
+            pt = part_bc.value if part_bc is not None else None
+            docs = _phrase_docids(readers, phrase, pt)
+            if dead_bc is not None and len(docs):
+                docs = docs[~np.isin(docs, dead_bc.value)]
             return pd.DataFrame({"docid": pd.Series(docs, dtype="int64")})
 
         return (

@@ -44,6 +44,7 @@ from search_engine_spark.build import (
     DL_BUCKET,
     POSTINGS_SCHEMA,
     _dedupe_last_write_wins,
+    assign_docids,
     doc_lengths,
     make_encode_fn,
     make_extract_fn,
@@ -130,10 +131,9 @@ def add_documents(
     )
 
     # tombstone existing docids whose pk is being replaced
+    batch_pks = batch.select(F.col(config.pk_col).alias("pk"))
     existing = spark.read.parquet(paths.doc_stats).select("docid", "pk")
-    tomb = existing.join(
-        batch.select(F.col(config.pk_col).alias("pk")), "pk"
-    ).select("docid")
+    tomb = existing.join(batch_pks, "pk").select("docid")
     # docid_col: horizon = this new generation — the replaced docids' OLDER
     # versions die (gens < gen) while the versions this batch writes into
     # gen stay live, which is exactly what lets externally-managed docids be
@@ -146,36 +146,18 @@ def add_documents(
     )
 
     # docids: externally managed when docid_col is set (same contract as
-    # build_index); otherwise continue after the current max (stable across
-    # cluster sizes: rank of pk within the batch, offset by max_docid)
+    # build_index); otherwise continue after the current max: rank of pk
+    # within the batch (the scalable two-pass range rank — deterministic
+    # for unique pks at any parallelism), offset by max_docid
     offset = int(meta["max_docid"]) + 1
     rank_handle = None
     if config.docid_col:
         with_id = batch.withColumn("docid", F.col(config.docid_col).cast("long"))
     else:
-        mode_ = config.append_rank_mode
-        if mode_ == "auto":
-            mode_ = (
-                "rank"
-                if batch.count() > config.append_window_max_docs
-                else "window"
-            )
-        if mode_ == "rank":
-            # scalable two-pass range rank (same machinery as build docids;
-            # deterministic for unique pks at any parallelism)
-            from search_engine_spark.build import assign_docids
-
-            ranked, rank_handle = assign_docids(
-                batch, config.pk_col, out_col="docid", return_handle=True
-            )
-            with_id = ranked.withColumn(
-                "docid", (F.col("docid") + F.lit(offset)).cast("long")
-            )
-        else:
-            w = Window.orderBy(config.pk_col)  # single task; size-gated above
-            with_id = batch.withColumn(
-                "docid", (F.row_number().over(w) - 1 + F.lit(offset)).cast("long")
-            )
+        ranked, rank_handle = assign_docids(batch, config.pk_col)
+        with_id = ranked.withColumn(
+            "docid", (F.col("docid") + F.lit(offset)).cast("long")
+        )
     if config.field_cols:
         search_sel = [F.col(c).alias(c) for c, _w in config.field_cols]
         search_names = [c for c, _w in config.field_cols]
@@ -191,20 +173,19 @@ def add_documents(
     docs.write.mode("append").parquet(paths.docs)
     if rank_handle is not None:
         rank_handle.unpersist()
-    new_pks = docs.select("pk")
-    docs_df = _read_with_gen(spark, paths.docs).join(new_pks, "pk").select(
+    # the batch's pks, not docs.select("pk"): that would re-run the docid
+    # rank (released above) for every job below
+    docs_df = _read_with_gen(spark, paths.docs).join(batch_pks, "pk").select(
         "docid", "pk", "gen", *search_names,
         *[c for c in config.attr_cols if c not in search_names]
     )
     # appended rows are the only ones with these pks — old versions of
     # replaced pks share the pk (and, under docid_col, the docid too); the
     # newest generation wins
-    from pyspark.sql import Window as _W
-
     docs_df = (
         docs_df.withColumn(
             "_rn", F.row_number().over(
-                _W.partitionBy("pk").orderBy(
+                Window.partitionBy("pk").orderBy(
                     F.col("gen").desc(), F.col("docid").desc()
                 )
             )
@@ -241,13 +222,8 @@ def add_documents(
     stats.write.mode("append").parquet(paths.doc_stats)
 
     # per-generation dictionary
-    terms = terms_agg(td_gen)
-    tw = Window.orderBy("term")
-    terms = terms.withColumn("term_id", F.row_number().over(tw) - F.lit(1))
     staging, commit = staged_write(paths.gen_dir(paths.terms, gen))
-    terms.select("term", "term_id", "df", "cf", "max_tf").write.mode(
-        "overwrite"
-    ).parquet(staging)
+    terms_agg(td_gen).write.mode("overwrite").parquet(staging)
     commit()
 
     # live avgdl AFTER the append (tombstoned dls removed)
@@ -488,13 +464,10 @@ def compact(spark: SparkSession, index_dir: str) -> dict:
     td = spark.read.parquet(paths.term_doc)
 
     # dictionary
-    terms = terms_agg(td)
-    tw = Window.orderBy("term")
-    terms = terms.withColumn("term_id", F.row_number().over(tw) - F.lit(1))
     tobs = Observation()
-    terms = terms.observe(tobs, F.count(F.lit(1)).alias("rows"))
+    terms = terms_agg(td).observe(tobs, F.count(F.lit(1)).alias("rows"))
     staging, commit = staged_write(paths.terms + ".compact")
-    terms.select("term", "term_id", "df", "cf", "max_tf").write.mode("overwrite").parquet(staging)
+    terms.write.mode("overwrite").parquet(staging)
     commit()
     n_terms = int(tobs.get["rows"])
     shutil.rmtree(paths.terms)
@@ -568,12 +541,13 @@ def _filter_deleted_from_arrays(
         varint_decode,
         varint_encode_runs,
     )
+    from search_engine_spark.query import _live_post_mask
 
     def _slices(buf: bytes, boffs: np.ndarray) -> list:
         mv = memoryview(buf)
         return [bytes(mv[boffs[i]:boffs[i + 1]]) for i in range(len(boffs) - 1)]
 
-    def _filter_group(pdf: "pd.DataFrame", is_dl: bool, dead_of) -> "pd.DataFrame":
+    def _filter_group(pdf: "pd.DataFrame", is_dl: bool, pt: tuple) -> "pd.DataFrame":
         """Filter one homogeneous row group (term rows or DL rows)."""
         n = pdf["n"].to_numpy().astype(np.int64)
         nz = n > 0
@@ -587,7 +561,7 @@ def _filter_deleted_from_arrays(
             varint_decode(docs_buf, total, dtype=np.int64), starts[nz]
         )
         gen_per_val = np.repeat(pdf["gen"].to_numpy().astype(np.int64), n)
-        keep = ~dead_of(docids, gen_per_val)
+        keep = _live_post_mask(docids, gen_per_val, pt)
         new_n = np.zeros(len(n), dtype=np.int64)
         new_n[nz] = np.add.reduceat(keep, starts[nz]) if keep.size else 0
         # guard reduceat duplication for empty rows (n==0 never occurs in
@@ -645,28 +619,17 @@ def _filter_deleted_from_arrays(
         return out
 
     def fn(batches):
-        t_ids_s, t_hor_s = bc.value
-
-        def dead_of(docids: np.ndarray, gens: np.ndarray) -> np.ndarray:
-            if not len(t_ids_s) or not len(docids):
-                return np.zeros(len(docids), dtype=bool)
-            i = np.searchsorted(t_ids_s, docids)
-            ic = np.minimum(i, len(t_ids_s) - 1)
-            hit = (i < len(t_ids_s)) & (t_ids_s[ic] == docids)
-            dead = np.zeros(len(docids), dtype=bool)
-            dead[hit] = t_hor_s[ic[hit]] > gens[hit]
-            return dead
-
+        pt = bc.value
         for pdf in batches:
-            if len(pdf) == 0 or len(t_ids_s) == 0:
+            if len(pdf) == 0 or len(pt[0]) == 0:
                 yield pdf
                 continue
             is_dl = pdf["bucket"].to_numpy() == DL_BUCKET
             parts = []
             if (~is_dl).any():
-                parts.append(_filter_group(pdf.loc[(~is_dl).tolist()].reset_index(drop=True), False, dead_of))
+                parts.append(_filter_group(pdf.loc[(~is_dl).tolist()].reset_index(drop=True), False, pt))
             if is_dl.any():
-                parts.append(_filter_group(pdf.loc[is_dl.tolist()].reset_index(drop=True), True, dead_of))
+                parts.append(_filter_group(pdf.loc[is_dl.tolist()].reset_index(drop=True), True, pt))
             out = pd.concat(parts, ignore_index=True) if parts else pdf.iloc[0:0]
             yield out[list(pdf.columns)]
 
@@ -697,7 +660,7 @@ def _tombstones_df(spark: SparkSession, paths: IndexPaths) -> DataFrame | None:
         return None
     d = spark.read.parquet(paths.deletes)
     if "horizon" not in d.columns:
-        d = d.withColumn("horizon", F.lit((1 << 31) - 1))
+        d = d.withColumn("horizon", F.lit(DEAD_HORIZON))
     return d.groupBy("docid").agg(F.max("horizon").alias("horizon"))
 
 
@@ -759,7 +722,8 @@ def update_settings(spark: SparkSession, index_dir: str, **changes) -> dict:
       (``config.EXTRACTION_AFFECTING``: searchable fields, attr set,
       positions, sharding, BM25 params …) the index is REBUILT from its
       docs snapshot via :func:`reindex` (docids preserved); pure tuning
-      knobs (stage1_*, term_rank_*, extract_partitions) rewrite meta only.
+      knobs (extract_partitions, encode_group_postings,
+      stage1_cache_max_bytes) rewrite meta only.
 
     Returns the updated meta dict.
     """

@@ -102,59 +102,53 @@ def test_salted_equals_unsalted_results(built):
 
 
 def test_staging_parquet_equals_cache(spark, tmp_path_factory):
-    """stage1_staging='parquet' (scale path: sorted run pinned in files)
-    must produce byte-identical postings and identical docids vs the
-    default cache pin."""
+    """The stage-1 sorted run pinned as staging parquet (input size unknown
+    or above stage1_cache_max_bytes) must produce byte-identical postings
+    and identical docids vs the cache pin of a small file-backed input."""
+    import os
+
+    from search_engine_spark.build import _stage1_staging_dir, build_index
+    from search_engine_spark.config import IndexConfig
+
     tmp = tmp_path_factory.mktemp("staging")
-    pdf = _corpus(300)
-    a = _build(spark, tmp, "cache", pdf, 4,
-               num_shards=2, num_buckets=2, stage1_staging="cache")
-    b = _build(spark, tmp, "parquet", pdf, 7,
-               num_shards=2, num_buckets=2, stage1_staging="parquet")
+    src = str(tmp / "corpus.parquet")
+    spark.createDataFrame(_corpus(300)).repartition(4).write.parquet(src)
+    pages = spark.read.parquet(src)
+
+    def build(name, **cfg_kw):
+        cfg = IndexConfig(text_col="text", pk_col="url", ts_col="warc_ts",
+                          attr_cols=("lang",), num_shards=2, num_buckets=2,
+                          **cfg_kw)
+        d = str(tmp / name)
+        staged = _stage1_staging_dir(pages, cfg, d) is not None
+        build_index(spark, pages, d, cfg)
+        return d, staged
+
+    a, a_staged = build("cache")
+    b, b_staged = build("parquet", stage1_cache_max_bytes=0)
+    assert (a_staged, b_staged) == (False, True)
     assert _docids(spark, a) == _docids(spark, b)
     assert _postings_hash(spark, a) == _postings_hash(spark, b)
-    import os
     assert not os.path.exists(os.path.join(b, "_staging_sorted_run")), (
         "staging run must be cleaned up after the docs stage"
     )
 
 
 def test_encode_salt_byte_identical(spark, tmp_path_factory):
-    """encode_salt=G (scale path: term-hash subgroups bound the encode
-    task grain) must produce byte-identical segments and identical search
-    results vs the unsalted encode — a (term, shard) posting list never
-    crosses groups, so only the grouping layout changes."""
+    """An encode salt > 1 (term-hash subgroups bound the encode task grain,
+    sized from the postings count and encode_group_postings) must produce
+    byte-identical segments and identical search results vs the unsalted
+    encode — a (term, shard) posting list never crosses groups, so only
+    the grouping layout changes."""
     from search_engine_spark.query import SearchIndex
 
     tmp = tmp_path_factory.mktemp("encsalt")
     pdf = _corpus(300)
-    a = _build(spark, tmp, "nosalt", pdf, 4,
-               num_shards=2, num_buckets=2, encode_salt=1)
-    b = _build(spark, tmp, "salt4", pdf, 6,
-               num_shards=2, num_buckets=2, encode_salt=4)
+    a = _build(spark, tmp, "nosalt", pdf, 4, num_shards=2, num_buckets=2)
+    b = _build(spark, tmp, "salted", pdf, 6, num_shards=2, num_buckets=2,
+               encode_group_postings=1)
     assert _docids(spark, a) == _docids(spark, b)
     assert _postings_hash(spark, a) == _postings_hash(spark, b)
     ixa, ixb = SearchIndex(spark, a), SearchIndex(spark, b)
     for q in ["w1 w2 w3", "w40", '"w1 w2"']:
         assert ixa.search_list(q, k=10) == ixb.search_list(q, k=10), q
-
-
-def test_term_rank_mode_rank_equals_window(spark, tmp_path_factory):
-    """term_rank_mode='rank' (scale path past 10M terms: two-pass range
-    rank, no single-task window) must produce the identical dictionary —
-    same (term, term_id, df, cf, max_tf) rows — and identical postings."""
-    tmp = tmp_path_factory.mktemp("trank")
-    pdf = _corpus(300)
-    a = _build(spark, tmp, "win", pdf, 4,
-               num_shards=2, num_buckets=2, term_rank_mode="window")
-    b = _build(spark, tmp, "rank", pdf, 6,
-               num_shards=2, num_buckets=2, term_rank_mode="rank")
-
-    def dict_rows(d):
-        return sorted(
-            (r["term"], r["term_id"], r["df"], r["cf"], r["max_tf"])
-            for r in spark.read.parquet(d + "/terms").collect()
-        )
-
-    assert dict_rows(a) == dict_rows(b)
-    assert _postings_hash(spark, a) == _postings_hash(spark, b)

@@ -116,9 +116,9 @@ def test_update_settings_tuning_knob_no_reindex(spark, settings_index):
     from search_engine_spark.update import update_settings
 
     before = read_meta(IndexPaths(settings_index))
-    meta = update_settings(spark, settings_index, term_rank_mode="rank")
+    meta = update_settings(spark, settings_index, extract_partitions=3)
     assert meta["build_id"] == before["build_id"]
-    assert meta["config"]["term_rank_mode"] == "rank"
+    assert meta["config"]["extract_partitions"] == 3
 
 
 def test_update_settings_rejects_unknown(spark, settings_index):

@@ -7,18 +7,20 @@ import pandas as pd
 import pytest
 
 
+_SMALL_ROWS = [
+    ("a", "spark index engine query", "en"),
+    ("b", "spark table join", "en"),
+    ("c", "window aggregate stream", "de"),
+    ("d", "query planner optimizer", "en"),
+]
+
+
 @pytest.fixture()
 def small_index(spark, tmp_path):
     from search_engine_spark.build import build_index
     from search_engine_spark.config import IndexConfig
 
-    rows = [
-        ("a", "spark index engine query", "en"),
-        ("b", "spark table join", "en"),
-        ("c", "window aggregate stream", "de"),
-        ("d", "query planner optimizer", "en"),
-    ]
-    pdf = pd.DataFrame(rows, columns=["url", "text", "lang"])
+    pdf = pd.DataFrame(_SMALL_ROWS, columns=["url", "text", "lang"])
     cfg = IndexConfig(text_col="text", pk_col="url", ts_col=None,
                       attr_cols=("lang",), num_shards=2, num_buckets=2)
     d = str(tmp_path / "idx")
@@ -456,45 +458,122 @@ def test_docid_col_delete_then_readd(spark, docid_index):
 
 
 def test_append_rank_mode_equals_window(spark, tmp_path):
-    """A backfill append past append_window_max_docs auto-switches to the
-    scalable two-pass range rank; docids must be identical to the
-    single-task window (and invariant to the batch's partitioning)."""
+    """Appended docids are max_docid + 1 + the rank of pk within the batch
+    (the two-pass range rank), whatever the batch's partitioning."""
     from search_engine_spark.build import build_index
     from search_engine_spark.config import IndexConfig
     from search_engine_spark.query import SearchIndex
+    from search_engine_spark.update import add_documents
 
     base = pd.DataFrame(
         [("a0", "base document text", "en")], columns=["url", "text", "lang"]
     )
     batch = pd.DataFrame(
-        [(f"b{i:03d}", f"appended doc number {i}", "en") for i in range(97)],
+        [(f"b{(i * 37) % 97:03d}", f"appended doc number {i}", "en")
+         for i in range(97)],
         columns=["url", "text", "lang"],
     )
-
-    def build_and_append(name, **cfg_kw):
-        from search_engine_spark.update import add_documents
-
-        cfg = IndexConfig(text_col="text", pk_col="url", ts_col=None,
-                          attr_cols=("lang",), num_shards=2, num_buckets=2,
-                          **cfg_kw)
-        d = str(tmp_path / name)
+    cfg = IndexConfig(text_col="text", pk_col="url", ts_col=None,
+                      attr_cols=("lang",), num_shards=2, num_buckets=2)
+    expected = {"a0": 0, **{pk: 1 + i for i, pk in enumerate(sorted(batch["url"]))}}
+    for parts in (1, 7):
+        d = str(tmp_path / f"p{parts}")
         build_index(spark, spark.createDataFrame(base), d, cfg)
-        add_documents(
-            spark, d, spark.createDataFrame(batch).repartition(7)
-        )
-        ix = SearchIndex(spark, d)
-        stats = spark.read.parquet(ix.paths.doc_stats)
-        return {r["pk"]: r["docid"] for r in stats.select("pk", "docid").collect()}
+        add_documents(spark, d, spark.createDataFrame(batch).repartition(parts))
+        stats = spark.read.parquet(SearchIndex(spark, d).paths.doc_stats)
+        got = {r["pk"]: r["docid"] for r in stats.select("pk", "docid").collect()}
+        assert got == expected, parts
+        shutil.rmtree(d, ignore_errors=True)
 
-    via_window = build_and_append("w", append_rank_mode="window")
-    via_rank = build_and_append("r", append_rank_mode="rank")
-    # auto with a tiny threshold must take the rank path and still agree
-    via_auto = build_and_append("a", append_rank_mode="auto",
-                                append_window_max_docs=10)
-    assert via_rank == via_window == via_auto
-    assert len(via_rank) == 98
-    for name in ("w", "r", "a"):
-        shutil.rmtree(str(tmp_path / name), ignore_errors=True)
+
+def test_phrase_docids_skips_tombstoned_docs(spark, small_index, docid_index):
+    """phrase_docids drops deleted documents (full tombstones on a
+    rank-docid index) and replaced versions (generation-horizon tombstones
+    on a docid_col index), like matching_docids."""
+    from search_engine_spark.query import SearchIndex
+    from search_engine_spark.update import add_documents, delete_documents
+
+    def phrase(d, words):
+        return [r["docid"] for r in
+                SearchIndex(spark, d).phrase_docids(words).collect()]
+
+    # rank-assigned docids: a=0, b=1, c=2, d=3
+    assert phrase(small_index, ["spark", "table"]) == [1]
+    delete_documents(spark, small_index, ["b"])
+    assert phrase(small_index, ["spark", "table"]) == []
+    assert phrase(small_index, ["spark", "index"]) == [0]
+
+    assert phrase(docid_index, ["spark", "table"]) == [1]
+    add_documents(spark, docid_index, spark.createDataFrame(
+        pd.DataFrame([(1, "k1", "table spark rewritten", "en")],
+                     columns=["doc_id", "url", "text", "lang"])))
+    assert phrase(docid_index, ["spark", "table"]) == []
+    assert phrase(docid_index, ["table", "spark"]) == [1]
+
+
+def test_parent_format_index_stays_usable(spark, small_index):
+    """Indexes written before the dictionary lost its term_id column and
+    IndexConfig lost its path selectors keep opening, serving, appending
+    and compacting; the retired names are not settable."""
+    import json
+    import os
+
+    import pyarrow as pa
+    import pyarrow.dataset as ds
+    import pyarrow.parquet as pq
+
+    from search_engine_spark.config import RETIRED_CONFIG_FIELDS
+    from search_engine_spark.index import IndexPaths
+    from search_engine_spark.query import SearchIndex
+    from search_engine_spark.update import add_documents, compact, update_settings
+
+    queries = ("spark", "query engine", "window", '"spark table"')
+
+    def rows(ix):
+        return {q: [(r["pk"], round(r["score"], 9)) for r in ix.search_rows(q, k=10)]
+                for q in queries}
+
+    before = rows(SearchIndex(spark, small_index))
+    paths = IndexPaths(small_index)
+    with open(paths.meta) as f:
+        meta = json.load(f)
+    retired = dict(
+        term_rank_mode="auto", term_window_max_terms=10_000_000,
+        append_rank_mode="auto", append_window_max_docs=5_000_000,
+        stage1_staging="auto", encode_salt=None,
+    )
+    assert set(retired) == RETIRED_CONFIG_FIELDS
+    meta["config"].update(retired)
+    with open(paths.meta, "w") as f:
+        json.dump(meta, f)
+    gen0 = paths.gen_dir(paths.terms, 0)
+    t = ds.dataset(gen0, format="parquet").to_table().sort_by("term")
+    t = t.add_column(1, "term_id", pa.array(range(t.num_rows), pa.int32()))
+    shutil.rmtree(gen0)
+    os.makedirs(gen0)
+    pq.write_table(t, os.path.join(gen0, "part-00000.parquet"))
+
+    ix = SearchIndex(spark, small_index)
+    assert rows(ix) == before
+
+    add_documents(spark, small_index, spark.createDataFrame(
+        pd.DataFrame([("e", "spark banana smoothie", "fr")],
+                     columns=["url", "text", "lang"])))
+    gen1 = ds.dataset(paths.gen_dir(paths.terms, 1), format="parquet")
+    assert "term_id" not in gen1.schema.names
+    ix = SearchIndex(spark, small_index)
+    assert [p for p, _ in _pk_results(ix, "banana")] == ["e"]
+    vocab = {w for _, text, _ in _SMALL_ROWS for w in text.split()}
+    n_terms = len(vocab | {"spark", "banana", "smoothie"})
+    stats = {r["stat"]: r["value"] for r in ix.stats().collect()}
+    assert stats["n_terms"] == n_terms
+
+    meta = compact(spark, small_index)
+    assert meta["n_terms"] == n_terms
+    assert not RETIRED_CONFIG_FIELDS & set(meta["config"])
+    assert [p for p, _ in _pk_results(SearchIndex(spark, small_index), "banana")] == ["e"]
+    with pytest.raises(ValueError, match="unknown settings"):
+        update_settings(spark, small_index, term_rank_mode="rank")
 
 
 def test_rank_docid_tombstones_stay_full(spark, small_index):

@@ -398,7 +398,7 @@ def _q_score_details(spark, sf_dir):
     BM25 contribution rows for the top-10 docs; sum(part) per docid equals
     the search score."""
     idx = _index(spark, sf_dir)
-    det = idx.score_details("table join merge", k=10, mode="exhaustive")
+    det = idx.score_details("table join merge", k=10)
     return det.select("docid", "term", F.round("part", SCORE_ROUND).alias("part"))
 
 

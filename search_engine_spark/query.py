@@ -18,7 +18,11 @@ top-k):
    rule's pruning; the analogue of the reference's bucket-refinement
    candidate subtraction, ``ranking/words.rs:66``); exhaustive numpy scoring
    for phrases, negation, filters, generation-horizon tombstones and the
-   score-shaping features. A query whose postings fit
+   score-shaping features. The exhaustive scorer, ``_exhaustive_scores``,
+   returns every candidate's score parts (one per term, phrase synonym,
+   proximity pair, exactness and words bucket), which ``score_details``
+   reads back; phrase, phrase-synonym and exactness matching share one
+   positional kernel, ``_aligned_keys``. A query whose postings fit
    ``driver_exec_max_postings`` is scored on the driver over pyarrow point
    reads (``_driver_gate``); the rest per shard (``groupBy('shard')``, or
    ``cogroup`` with the filter's allowed docids) inside an Arrow-batched
@@ -468,15 +472,16 @@ class SearchIndex:
     def _lookup_exact(self, words: list[str]) -> dict[str, int]:
         if not words:
             return {}
+        words = list(dict.fromkeys(words))  # first-seen order, hash-seed free
         d = self._local_dict()
-        if d is not None:
-            return {w: d[w] for w in set(words) if w in d}
-        rows = (
-            self._terms.filter(F.col("term").isin(list(set(words))))
-            .select("term", "df")
-            .collect()
-        )
-        return {r["term"]: r["df"] for r in rows}
+        if d is None:
+            rows = (
+                self._terms.filter(F.col("term").isin(words))
+                .select("term", "df")
+                .collect()
+            )
+            d = {r["term"]: r["df"] for r in rows}
+        return {w: d[w] for w in words if w in d}
 
     def _rank_splits(
         self, cands: list[tuple[int, int, str, str]]
@@ -486,7 +491,7 @@ class SearchIndex:
         how many documents contain ``left`` immediately followed by
         ``right``. The reference reads this from its precomputed
         ``word_pair_proximity_docids`` DB; we compute it on demand from
-        stored positions with the ``_phrase_docids`` packed-key kernel over
+        stored positions with the ``_aligned_keys`` phrase kernel over
         driver point-read postings (row-group-pruned pyarrow, no Spark
         job). Only runs when the order can matter (>1 candidate); falls
         back to min-df descending when positions aren't stored or the
@@ -515,9 +520,10 @@ class SearchIndex:
                 terms = sorted({h for c in uncached for h in (c[2], c[3])})
                 readers = self._readers_for(terms)
                 deleted = self._deleted if len(self._deleted) else None
+                occ_cache: dict[str, np.ndarray] = {}
                 for _min_df, _half_dfs, left, right in uncached:
                     docs = _phrase_docids(readers, [left, right],
-                                          self._partial_tombs)
+                                          self._partial_tombs, occ_cache)
                     if deleted is not None and len(docs):
                         docs = docs[~np.isin(docs, deleted)]
                     self._split_rank_cache[(left, right)] = len(docs)
@@ -814,7 +820,7 @@ class SearchIndex:
     def _phrase_df(self, words: tuple[str, ...]) -> int | None:
         """Number of live docs containing ``words`` at consecutive positions
         (phrase df for synonym-phrase idf). Driver point-read + the
-        ``_phrase_docids`` packed-key kernel, cached per phrase tuple
+        ``_aligned_keys`` phrase kernel, cached per phrase tuple
         (shares the pair cache with ``_rank_splits`` — a 2-word phrase df
         IS the pair-proximity-1 doc count). Returns None when positions
         aren't stored or the words' postings exceed the point-read budget
@@ -1615,110 +1621,33 @@ class SearchIndex:
             }
         return self._docs_schema_cache
 
-    def score_details(
-        self, query: str, k: int = 10, mode: str = "auto", **plan_kw
-    ) -> DataFrame:
+    def score_details(self, query: str, k: int = 10, **plan_kw) -> DataFrame:
         """Per-component score breakdown (reference K9
         ``src/score_details.rs:31-57``, per-rule rank/max_rank replaced by
         per-term BM25 contributions): for each top-k document, one row per
-        contributing scoring term with its ``part = weight * idf-impact``,
-        plus one ``~prox:a:b`` row per proximity pair bonus and — under
-        ``matching_strategy='last'`` — one ``~words`` row carrying the
-        words-rule ``bucket * offset`` fold. Sum(part) grouped by docid
-        equals the search score exactly, for every matching strategy.
+        non-zero part of its exhaustive score (``_exhaustive_scores``): a
+        scoring term's ``weight * impact``, a ``~syn:a-b`` phrase synonym,
+        a ``~prox:a:b`` pair bonus (``~prox`` under the cost model),
+        ``~exact`` and, under ``matching_strategy='last'``, the ``~words``
+        bucket fold. Sum(part) grouped by docid is the search score.
 
-        -> DataFrame(docid long, term string, part double), driver-built
-        (k-bounded output; postings slices are the query's own terms)."""
+        -> DataFrame(docid long, term string, part double), built from one
+        driver-side exhaustive pass over the query's own postings slices
+        with the index's full and generation-horizon tombstones."""
         plan = self.plan(query, k, **plan_kw)
-        if not plan.term_weights:
-            return self.spark.createDataFrame([], "docid long, term string, part double")
-        top = self.execute(plan, mode=mode).select("docid").collect()
-        docids = np.array(sorted(r["docid"] for r in top), dtype=np.int64)
-        readers = self._readers_for(_plan_terms(plan))
-        k1, b = self.config.k1, self.config.b
         rows: list[tuple[int, str, float]] = []
-        pt = self._partial_tombs
-        for term, weight in sorted(plan.term_weights.items()):
-            for r, _scale in readers.get(term, ()):
-                d, tf, dl = _live_decode(r, pt)
-                sel = np.isin(d, docids)
-                if not sel.any():
-                    continue
-                part = bm25_impact(tf[sel], dl[sel], self.avgdl, k1, b,
-                                   weight=weight)
-                rows.extend(
-                    (int(dd), term, float(pp))
-                    for dd, pp in zip(d[sel], part)
-                )
-        if plan.prox_weight and plan.prox_pairs:
-            occ_cache: dict[str, np.ndarray] = {}
-            if plan.prox_gaps is not None:
-                # cost model: one '~prox' component per doc (the budgeted
-                # fold is not per-pair additive)
-                bonus = _cost_prox_bonus(
-                    readers, plan.prox_pairs, plan.prox_gaps,
-                    plan.prox_weight, docids, occ_cache, pt,
-                )
-                rows.extend(
-                    (int(dd), "~prox", float(pp))
-                    for dd, pp in zip(docids, bonus)
-                    if pp
-                )
-            else:
-                for a, bb in plan.prox_pairs:
-                    pd_docs, bonus = _pair_prox_bonus(
-                        readers, a, bb, plan.prox_weight, occ_cache, pt
-                    )
-                    sel = np.isin(pd_docs, docids)
-                    rows.extend(
-                        (int(dd), f"~prox:{a}:{bb}", float(pp))
-                        for dd, pp in zip(pd_docs[sel], bonus[sel])
-                    )
-        if plan.syn_phrases:
-            # phrase-synonym pseudo-terms: mirror _exhaustive_topk's
-            # weighted tf_p impact exactly, one '~syn:a-b-c' row per
-            # matching doc, keeping sum(part) == score
-            for ph, wt in plan.syn_phrases:
-                pdocs, pcnt, pdls = _phrase_matches(readers, list(ph), pt)
-                if not len(pdocs):
-                    continue
-                sel = np.isin(pdocs, docids)
-                part = bm25_impact(pcnt[sel], pdls[sel], self.avgdl, k1, b,
-                                   weight=wt)
-                label = "~syn:" + "-".join(ph)
-                rows.extend(
-                    (int(dd), label, float(pp))
-                    for dd, pp in zip(pdocs[sel], part)
-                )
-        if plan.exact_boost and plan.exact_words:
-            # indexed exact words are scoring terms, so `readers` has them;
-            # an unindexed word yields the empty exact set either way
-            ed = _exact_attr_docids(
-                readers, plan.exact_words, not self.config.field_cols, pt,
+        if plan.term_weights:
+            docs, scores, parts = _exhaustive_scores(
+                self._readers_for(_plan_terms(plan)), plan, None, self.avgdl,
+                self.config.k1, self.config.b,
+                self._deleted if len(self._deleted) else None,
+                self._partial_tombs, not self.config.field_cols,
             )
-            sel = np.isin(ed, docids)
-            rows.extend(
-                (int(dd), "~exact", float(plan.exact_boost))
-                for dd in ed[sel]
-            )
-        if plan.word_groups:
-            # the executed score includes bucket * offset_val (_last_fold),
-            # so emit it as a '~words' component to keep sum(part) == score
-            term_docs: dict[str, np.ndarray] = {}
-            for t in {x for grp in plan.word_groups for x in grp}:
-                chunks = [_live_decode(r, pt)[0]
-                          for r, _s in readers.get(t, ())]
-                if chunks:
-                    term_docs[t] = np.concatenate(chunks)
-            offset_val, wcnt = _last_fold(
-                docids, plan.word_groups, term_docs, plan.term_weights,
-                plan.prox_weight, plan.prox_pairs, plan.exact_boost,
-                plan.syn_phrases,
-            )
-            rows.extend(
-                (int(dd), "~words", float(c * offset_val))
-                for dd, c in zip(docids, wcnt) if c > 0
-            )
+            top = docs[np.lexsort((docs, -scores))[:k]]
+            for label, pdocs, values in parts:
+                sel = np.isin(pdocs, top) & (values != 0)
+                rows.extend((int(d), label, float(v))
+                            for d, v in zip(pdocs[sel], values[sel]))
         return self.spark.createDataFrame(
             rows, "docid long, term string, part double"
         )
@@ -2011,15 +1940,12 @@ def _topk(
     if algo == "maxscore":
         return _maxscore_topk(readers, plan.term_weights, k, avgdl, k1, b,
                               deleted)
-    return _exhaustive_topk(
-        readers, plan.term_weights, plan.phrases, set(plan.negated), allowed,
-        k, avgdl, k1, b, deleted, match_all=plan.match_all,
-        prox_pairs=plan.prox_pairs, prox_weight=plan.prox_weight,
-        prox_gaps=plan.prox_gaps, exact_boost=plan.exact_boost,
-        exact_words=plan.exact_words, exact_dl_check=exact_dl_check,
-        word_groups=plan.word_groups, syn_phrases=plan.syn_phrases,
-        partial_tombs=partial_tombs,
+    docs, scores, _parts = _exhaustive_scores(
+        readers, plan, allowed, avgdl, k1, b, deleted, partial_tombs,
+        exact_dl_check,
     )
+    idx = np.lexsort((docs, -scores))[:k]
+    return [(int(docs[i]), float(scores[i])) for i in idx]
 
 
 def _last_fold(
@@ -2084,44 +2010,80 @@ def _exhaustive_topk(
     syn_phrases: list[tuple[tuple[str, ...], float]] | None = None,
     partial_tombs: tuple | None = None,
 ) -> list[tuple[int, float]]:
-    """Vectorized full-decode scoring: concatenate (docid, idf*impact) across
-    terms (and segment generations), aggregate per docid with np.add.at,
-    apply phrase/negation/filter/tombstone/match-all constraints, add the
-    pair-proximity bonus (reference K4; ``prox_gaps`` set selects the
-    multi-pair budgeted cost model, see QueryPlan) from stored positions,
-    fold the Last-strategy words bucket (QueryPlan.word_groups) into the
-    score, top-k."""
+    """Top-k (docid, score) of ``_exhaustive_scores`` over the plan these
+    fields make up."""
+    plan = QueryPlan(
+        term_weights=term_weights, phrases=phrases, negated=list(neg_set), k=k,
+        match_all=match_all, prox_pairs=prox_pairs or [],
+        prox_weight=prox_weight, prox_gaps=prox_gaps, exact_boost=exact_boost,
+        exact_words=exact_words, word_groups=word_groups,
+        syn_phrases=syn_phrases,
+    )
+    return _topk(readers, plan, "exhaustive", k, avgdl, k1, b, deleted,
+                 allowed, partial_tombs, exact_dl_check)
+
+
+def _exhaustive_scores(
+    readers: dict[str, list[tuple[PostingReader, float]]],
+    plan: QueryPlan,
+    allowed: np.ndarray | None,
+    avgdl: float,
+    k1: float,
+    b: float,
+    deleted: np.ndarray | None = None,
+    partial_tombs: tuple | None = None,
+    exact_dl_check: bool = True,
+) -> tuple[np.ndarray, np.ndarray, list[tuple[str, np.ndarray, np.ndarray]]]:
+    """Vectorized full-decode scoring of every candidate of ``plan``:
+    concatenate (docid, weight*impact) across terms (and segment
+    generations), aggregate per docid with np.add.at, add the phrase-synonym
+    pseudo-terms, the proximity bonus (reference K4; ``prox_gaps`` set
+    selects the multi-pair budgeted cost model, see QueryPlan) and the
+    exactness boost, apply the phrase/negation/filter/tombstone/match-all
+    constraints, fold the Last-strategy words bucket (QueryPlan.word_groups).
+
+    -> (sorted candidate docids, scores, parts). Each part is ``(label,
+    docids, values)``, one per score component: a scoring term (one part
+    per generation), ``~syn:a-b``, ``~prox:a:b`` (``~prox`` under the cost
+    model), ``~exact`` and ``~words``. A candidate's score is the sum of
+    its parts' values. Phrases, phrase synonyms, proximity and exactness
+    decode each word's positions once, through one occurrence cache."""
+    pt = partial_tombs
+    occ_cache: dict[str, np.ndarray] = {}
+    parts: list[tuple[str, np.ndarray, np.ndarray]] = []
     doc_chunks, score_chunks = [], []
     per_term_docs: list[np.ndarray] = []
     term_docs: dict[str, np.ndarray] = {}
-    for term, idf in term_weights.items():
+    for term, idf in plan.term_weights.items():
         t_docs = []
         for r, _scale in readers.get(term, ()):  # scores use current avgdl
-            docids, tfs, dls = _live_decode(r, partial_tombs)
+            docids, tfs, dls = _live_decode(r, pt)
+            impact = bm25_impact(tfs, dls, avgdl, k1, b, weight=idf)
+            parts.append((term, docids, impact))
             doc_chunks.append(docids)
-            score_chunks.append(bm25_impact(tfs, dls, avgdl, k1, b, weight=idf))
+            score_chunks.append(impact)
             t_docs.append(docids)
-        if match_all:
+        if plan.match_all:
             per_term_docs.append(
                 np.concatenate(t_docs) if t_docs else np.zeros(0, dtype=np.int64)
             )
-        if word_groups and t_docs:
+        if plan.word_groups and t_docs:
             term_docs[term] = np.concatenate(t_docs)
     # phrase-synonym pseudo-terms (QueryPlan.syn_phrases spec): docs
     # matching ONLY the phrase still become candidates (appended with a
     # zero base score), then receive the weighted impact of tf_p
     syn_data: list[tuple[np.ndarray, np.ndarray]] = []
-    if syn_phrases:
-        for ph, wt in syn_phrases:
-            pdocs, pcnt, pdls = _phrase_matches(readers, list(ph),
-                                                partial_tombs)
-            if len(pdocs):
-                syn_data.append(
-                    (pdocs, bm25_impact(pcnt, pdls, avgdl, k1, b, weight=wt)))
-                doc_chunks.append(pdocs)
-                score_chunks.append(np.zeros(len(pdocs), dtype=np.float64))
+    for ph, wt in plan.syn_phrases or ():
+        pdocs, pcnt, pdls = _phrase_matches(readers, list(ph), pt, occ_cache)
+        if len(pdocs):
+            pbonus = bm25_impact(pcnt, pdls, avgdl, k1, b, weight=wt)
+            syn_data.append((pdocs, pbonus))
+            parts.append(("~syn:" + "-".join(ph), pdocs, pbonus))
+            doc_chunks.append(pdocs)
+            score_chunks.append(np.zeros(len(pdocs), dtype=np.float64))
     if not doc_chunks:
-        return []
+        empty = np.zeros(0, dtype=np.int64)
+        return empty, empty.astype(np.float64), parts
     docs = np.concatenate(doc_chunks)
     scores = np.concatenate(score_chunks)
     uniq, inv = np.unique(docs, return_inverse=True)
@@ -2131,40 +2093,42 @@ def _exhaustive_topk(
         # every pdoc is in uniq by construction (appended above)
         np.add.at(agg, np.searchsorted(uniq, pdocs), pbonus)
 
-    if prox_weight and prox_pairs:
-        occ_cache: dict[str, np.ndarray] = {}
-        if prox_gaps is not None:  # multi-pair budgeted cost model
-            agg += _cost_prox_bonus(
-                readers, prox_pairs, prox_gaps, prox_weight, uniq, occ_cache,
-                partial_tombs,
+    if plan.prox_weight and plan.prox_pairs:
+        if plan.prox_gaps is not None:  # multi-pair budgeted cost model
+            bonus = _cost_prox_bonus(
+                readers, plan.prox_pairs, plan.prox_gaps, plan.prox_weight,
+                uniq, occ_cache, pt,
             )
+            parts.append(("~prox", uniq, bonus))
+            agg += bonus
         else:
-            for ta, tb in prox_pairs:  # don't shadow the BM25 `b` parameter
+            for ta, tb in plan.prox_pairs:  # don't shadow the BM25 `b`
                 pd_docs, pd_bonus = _pair_prox_bonus(
-                    readers, ta, tb, prox_weight, occ_cache, partial_tombs
+                    readers, ta, tb, plan.prox_weight, occ_cache, pt
                 )
                 if len(pd_docs):
+                    parts.append((f"~prox:{ta}:{tb}", pd_docs, pd_bonus))
                     pos = np.searchsorted(uniq, pd_docs)
                     ok = (pos < len(uniq)) & (uniq[np.minimum(pos, len(uniq) - 1)] == pd_docs)
                     np.add.at(agg, pos[ok], pd_bonus[ok])
 
-    if exact_boost and exact_words:
-        ed = _exact_attr_docids(readers, exact_words, exact_dl_check,
-                                partial_tombs)
+    if plan.exact_boost and plan.exact_words:
+        ed = _exact_attr_docids(readers, plan.exact_words, exact_dl_check, pt,
+                                occ_cache)
         if len(ed):
+            parts.append(("~exact", ed, np.full(len(ed), plan.exact_boost)))
             epos = np.searchsorted(uniq, ed)
             eok = (epos < len(uniq)) & (uniq[np.minimum(epos, len(uniq) - 1)] == ed)
-            agg[epos[eok]] += exact_boost
+            agg[epos[eok]] += plan.exact_boost
 
     mask = np.ones(len(uniq), dtype=bool)
-    if match_all:
-        for t_docs in per_term_docs:
-            mask &= np.isin(uniq, t_docs)
-    for ph in phrases:
-        mask &= np.isin(uniq, _phrase_docids(readers, ph, partial_tombs))
-    for t in neg_set:
+    for t_docs in per_term_docs:
+        mask &= np.isin(uniq, t_docs)
+    for ph in plan.phrases:
+        mask &= np.isin(uniq, _phrase_docids(readers, ph, pt, occ_cache))
+    for t in plan.negated:
         for r, _scale in readers.get(t, ()):
-            nd, _, _ = _live_decode(r, partial_tombs)
+            nd, _, _ = _live_decode(r, pt)
             mask &= ~np.isin(uniq, nd)
     if allowed is not None:
         mask &= np.isin(uniq, allowed)
@@ -2172,17 +2136,16 @@ def _exhaustive_topk(
         mask &= ~np.isin(uniq, deleted)
 
     uniq, agg = uniq[mask], agg[mask]
-    if len(uniq) == 0:
-        return []
-    if word_groups:
+    if plan.word_groups and len(uniq):
         offset_val, wcnt = _last_fold(
-            uniq, word_groups, term_docs, term_weights, prox_weight,
-            prox_pairs, exact_boost, syn_phrases,
+            uniq, plan.word_groups, term_docs, plan.term_weights,
+            plan.prox_weight, plan.prox_pairs, plan.exact_boost,
+            plan.syn_phrases,
         )
-        agg = agg + wcnt * offset_val
-    kk = min(k, len(uniq))
-    idx = np.lexsort((uniq, -agg))[:kk]
-    return [(int(uniq[i]), float(agg[i])) for i in idx]
+        words = wcnt * offset_val
+        parts.append(("~words", uniq, words))
+        agg = agg + words
+    return uniq, agg, parts
 
 
 _POS_STRIDE = np.int64(1) << 32  # positions are token indexes, far below 2^32
@@ -2240,9 +2203,11 @@ def _occurrence_keys(
     pt: tuple | None = None,
 ) -> np.ndarray:
     """Every (docid, position) occurrence of ``term`` packed as
-    ``docid << 32 | pos``, globally sorted. One flat decode per generation
-    (docids disjoint across generations); a single-generation stream is
-    already sorted, multi-generation streams get one ``np.sort``."""
+    ``docid << 32 | pos``, sorted and unique. One flat decode per
+    generation (a docid's live postings come from one generation); a
+    single-generation stream is already sorted, multi-generation streams
+    get one ``np.sort``. A BM25F field of weight w stores each of its
+    positions w times; the copies fold to one key."""
     if cache is not None and term in cache:
         return cache[term]
     chunks = []
@@ -2256,6 +2221,9 @@ def _occurrence_keys(
         keys = chunks[0]
     else:
         keys = np.sort(np.concatenate(chunks))
+    dup = keys[1:] == keys[:-1]
+    if dup.any():
+        keys = keys[np.r_[True, ~dup]]
     if cache is not None:
         cache[term] = keys
     return keys
@@ -2353,166 +2321,101 @@ def _cost_prox_bonus(
     return prox_weight * np.maximum(0.0, budget - cost) / budget
 
 
-def _exact_attr_docids(
+def _aligned_keys(
     readers: dict[str, list[tuple[PostingReader, float]]],
     words: list[str],
-    dl_check: bool,
+    pt: tuple | None = None,
+    occ_cache: dict[str, np.ndarray] | None = None,
+    anchored: bool = False,
+) -> np.ndarray:
+    """The positional-match kernel (reference R2 ``phrase_resolve``: a
+    phrase is an intersection over positions): sorted keys
+    ``docid << 32 | s`` of every start ``s`` at which ``words[i]`` sits at
+    position ``s + i`` for every i.
+
+    Word i's occurrence keys (``_occurrence_keys``: sorted and unique)
+    keep the positions that can align, shift by -i onto the start they
+    would belong to, and the k-way ``np.intersect1d`` keeps the starts
+    every word agrees on — O(sum postings) sort-merge work, no
+    per-candidate Python. A word at position < i cannot align;
+    ``anchored`` keeps only field-local position == i instead, so the
+    surviving starts are field starts (``fid << 16``)."""
+    inter = np.zeros(0, dtype=np.int64)
+    for i, t in enumerate(words):
+        keys = _occurrence_keys(readers, t, occ_cache, pt)
+        if anchored:
+            keys = keys[(keys & 0xFFFF) == i] - i
+        elif i:
+            keys = keys[(keys & _POS_MASK) >= i] - i
+        inter = keys if i == 0 else np.intersect1d(inter, keys,
+                                                   assume_unique=True)
+        if not len(inter):
+            break
+    return inter
+
+
+def _first_word_dls(
+    readers: dict[str, list[tuple[PostingReader, float]]],
+    word: str,
+    docs: np.ndarray,
     pt: tuple | None = None,
 ) -> np.ndarray:
-    """Docs where a searchable field's whole content equals ``words``
-    (QueryPlan.exact_boost spec). Anchored variant of ``_phrase_docids``:
-    occurrence keys keep only positions whose field-local part equals the
-    word's query index i, packed ``docid << 32 | (pos - i)`` so the
-    intersection's surviving anchors are exactly ``fid << 16`` (field
-    starts). ``dl_check`` (single-field indexes) additionally requires the
-    doc's token count to equal ``len(words)``."""
-    n = len(words)
-    if n == 0:
-        return np.zeros(0, dtype=np.int64)
-    keysets = []
-    for i, t in enumerate(words):
-        rs = readers.get(t, ())
-        if not rs:
-            return np.zeros(0, dtype=np.int64)
-        chunks = []
-        for r, _scale in rs:
-            docids, pos, lens = _live_decode_flat(r, pt)
-            if not len(pos):
-                continue
-            rep = np.repeat(docids, lens)
-            keep = (pos & np.int64(0xFFFF)) == i  # field-local position == i
-            if keep.any():
-                chunks.append((rep[keep] << 32) | (pos[keep] - i))
-        if not chunks:
-            return np.zeros(0, dtype=np.int64)
-        keysets.append(np.unique(np.concatenate(chunks)))
-    inter = keysets[0]
-    for ks in keysets[1:]:
-        if len(inter) == 0:
-            break
-        inter = np.intersect1d(inter, ks, assume_unique=True)
-    docs = np.unique(inter >> 32).astype(np.int64, copy=False)
-    if dl_check and len(docs):
-        # exact docs necessarily contain words[0]; its postings carry dl
-        d_chunks, l_chunks = [], []
-        for r, _scale in readers.get(words[0], ()):
-            d, _, dl = _live_decode(r, pt)
-            d_chunks.append(d)
-            l_chunks.append(dl)
-        dd = np.concatenate(d_chunks)
-        ll = np.concatenate(l_chunks)
+    """dl of each of ``docs`` (sorted, every one holding ``word``) from
+    ``word``'s postings — any word's postings carry the doc's dl."""
+    decoded = [_live_decode(r, pt) for r, _scale in readers.get(word, ())]
+    dd = np.concatenate([d for d, _tf, _dl in decoded])
+    dl = np.concatenate([dl for _d, _tf, dl in decoded])
+    if len(decoded) > 1:
         order = np.argsort(dd, kind="stable")
-        dd, ll = dd[order], ll[order]
-        docs = docs[ll[np.searchsorted(dd, docs)] == n]
-    return docs
+        dd, dl = dd[order], dl[order]
+    return dl[np.searchsorted(dd, docs)]
 
 
 def _phrase_docids(
     readers: dict[str, list[tuple[PostingReader, float]]],
     phrase: list[str],
     pt: tuple | None = None,
+    occ_cache: dict[str, np.ndarray] | None = None,
 ) -> np.ndarray:
-    """Docids (sorted) where the phrase occurs at consecutive positions
-    (reference R2 ``phrase_resolve`` rebuilt over exact stored positions).
-    Docids are disjoint across a term's generations, so per-term streams
-    concatenate.
-
-    Fully vectorized: each (docid, pos) occurrence of phrase term i is
-    packed as ``docid << 32 | (pos - i)`` — the key of the phrase *start*
-    it would belong to — and the phrase matches exactly the docids in the
-    k-way ``np.intersect1d`` of the per-term key sets. No per-candidate
-    Python loop: a head-word phrase over a large shard costs
-    O(sum postings · log) sort-merge work instead of a dict/set probe per
-    candidate position."""
-    stride = _POS_STRIDE
-    keysets = []
-    for i, t in enumerate(phrase):
-        rs = readers.get(t, ())
-        if not rs:
-            return np.zeros(0, dtype=np.int64)
-        chunks = []
-        for r, _scale in rs:
-            docids, pos, lens = _live_decode_flat(r, pt)
-            if not len(pos):
-                continue
-            rep = np.repeat(docids, lens)
-            if i:  # a term at position < i cannot start-align a phrase
-                keep = pos >= i
-                pos, rep = pos[keep], rep[keep]
-            chunks.append(rep * stride + (pos - i))
-        if not chunks:
-            return np.zeros(0, dtype=np.int64)
-        keysets.append(np.unique(np.concatenate(chunks)))
-    inter = keysets[0]
-    for ks in keysets[1:]:
-        if len(inter) == 0:
-            break
-        inter = np.intersect1d(inter, ks, assume_unique=True)
-    return np.unique(inter >> 32).astype(np.int64, copy=False)
+    """Docids (sorted) where the phrase occurs at consecutive positions."""
+    return np.unique(_aligned_keys(readers, phrase, pt, occ_cache) >> 32)
 
 
 def _phrase_matches(
     readers: dict[str, list[tuple[PostingReader, float]]],
     phrase: list[str],
     pt: tuple | None = None,
+    occ_cache: dict[str, np.ndarray] | None = None,
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """(docids, occurrence counts, dls) for docs containing ``phrase`` at
     consecutive positions — the pseudo-term decode behind
     ``QueryPlan.syn_phrases``: counts are the phrase's tf (number of
-    aligned starts), dl comes from the first word's postings (any word's
-    dl is the doc's dl). Same packed start-key construction as
-    ``_phrase_docids``; keys are globally unique ((docid, pos) occurs once
-    per term — docids are disjoint across generations) so the k-way
-    ``intersect1d`` keeps each matching start exactly once."""
-    stride = _POS_STRIDE
-    empty = (np.zeros(0, dtype=np.int64), np.zeros(0, dtype=np.int64),
-             np.zeros(0, dtype=np.float64))
-    keysets = []
-    dl_docs: list[np.ndarray] = []
-    dl_vals: list[np.ndarray] = []
-    for i, t in enumerate(phrase):
-        rs = readers.get(t, ())
-        if not rs:
-            return empty
-        chunks = []
-        for r, _scale in rs:
-            if i == 0:
-                d0, _tf0, dl0 = _live_decode(r, pt)
-                if len(d0):
-                    dl_docs.append(d0)
-                    dl_vals.append(dl0)
-            docids, pos, lens = _live_decode_flat(r, pt)
-            if not len(pos):
-                continue
-            rep = np.repeat(docids, lens)
-            if i:  # a term at position < i cannot start-align a phrase
-                keep = pos >= i
-                pos, rep = pos[keep], rep[keep]
-            chunks.append(rep * stride + (pos - i))
-        if not chunks:
-            return empty
-        ks = np.concatenate(chunks)
-        if len(chunks) > 1:
-            ks = np.sort(ks)
-        keysets.append(ks)
-    inter = keysets[0]
-    for ks in keysets[1:]:
-        if len(inter) == 0:
-            break
-        inter = np.intersect1d(inter, ks, assume_unique=True)
-    if not len(inter):
-        return empty
-    docs_rep = (inter >> 32).astype(np.int64, copy=False)
-    starts = np.flatnonzero(np.r_[True, docs_rep[1:] != docs_rep[:-1]])
-    docs = docs_rep[starts]
-    counts = np.diff(np.r_[starts, len(docs_rep)]).astype(np.int64)
-    dd = np.concatenate(dl_docs)
-    dv = np.concatenate(dl_vals)
-    if len(dl_docs) > 1:
-        order = np.argsort(dd, kind="stable")
-        dd, dv = dd[order], dv[order]
-    dls = dv[np.searchsorted(dd, docs)].astype(np.float64)
+    aligned starts)."""
+    starts = _aligned_keys(readers, phrase, pt, occ_cache)
+    if not len(starts):
+        return (np.zeros(0, dtype=np.int64), np.zeros(0, dtype=np.int64),
+                np.zeros(0, dtype=np.float64))
+    docs, counts = np.unique(starts >> 32, return_counts=True)
+    dls = _first_word_dls(readers, phrase[0], docs, pt).astype(np.float64)
     return docs, counts, dls
+
+
+def _exact_attr_docids(
+    readers: dict[str, list[tuple[PostingReader, float]]],
+    words: list[str],
+    dl_check: bool,
+    pt: tuple | None = None,
+    occ_cache: dict[str, np.ndarray] | None = None,
+) -> np.ndarray:
+    """Docs where a searchable field's whole content equals ``words``
+    (QueryPlan.exact_boost spec): the anchored match, words[i] at
+    field-local position i. ``dl_check`` (single-field indexes)
+    additionally requires the doc's token count to equal ``len(words)``."""
+    docs = np.unique(
+        _aligned_keys(readers, words, pt, occ_cache, anchored=True) >> 32)
+    if dl_check and len(docs):
+        docs = docs[_first_word_dls(readers, words[0], docs, pt) == len(words)]
+    return docs
 
 
 # ---------------------------------------------------------------------------

@@ -817,16 +817,17 @@ def snapshot(index_dir: str, dest_dir: str, include_metrics: bool = True) -> dic
     the environment into a tarball; here: a directory copy openable
     directly by ``SearchIndex``). Returns the pinned meta dict.
 
-    Consistency contract: the source ``meta.json`` is read FIRST (pinning
-    the committed generation set), the data trees are copied, then any
-    ``gen=N`` segment directory NOT in the pinned set is pruned and the
-    PINNED meta is written last — so a concurrent ``add_documents``
-    landing generation N+1 mid-copy cannot leak into the snapshot's
-    segment stores, and the flat stores (docs / doc_stats / deletes)
-    carry a ``gen`` column that readers bound by the pinned meta's
-    generation horizon. Build checkpoints (``_checkpoints``) are
-    deliberately NOT copied: a snapshot is a read surface, not a
-    resumable build.
+    Consistency contract: the snapshot is point-in-time only when no
+    writer runs during the copy. The source ``meta.json`` is read FIRST
+    (pinning the committed generation set), the data trees are copied,
+    then any ``gen=N`` segment directory NOT in the pinned set is pruned
+    and the PINNED meta is written last, so a generation landed mid-copy
+    does not reach the segment stores (term_doc / terms / postings). The
+    flat stores (docs / doc_stats / deletes) are copied as they are:
+    readers do not bound them by the pinned generations, so rows or
+    tombstones a concurrent writer adds mid-copy can reach the snapshot.
+    Build checkpoints (``_checkpoints``) are deliberately NOT copied: a
+    snapshot is a read surface, not a resumable build.
 
     Scale note: this is a driver-side file copy — at cluster scale the
     same pin-prune-meta-last sequence runs as a DistCp/object-store

@@ -150,25 +150,34 @@ def test_no_positions_mode():
         r.decode_all_positions()
 
 
-def _readers_from_docs(docs: dict[int, list[str]]):
-    """Build {term: [(PostingReader, 1.0)]} postings (with positions) from
-    docid -> token list, the shape _phrase_docids consumes."""
+def _readers_from_docs(docs: dict[int, list[str]], gen: int = 0,
+                       weights: tuple[int, ...] = (1, 1)):
+    """Build {term: [(PostingReader, 1.0)]} postings (with positions) of
+    segment generation ``gen`` from docid -> token list, the shape
+    _phrase_docids consumes. A doc given as a tuple of token lists has one
+    field per list, built as BM25F builds them: positions packed
+    ``fid << 16 | pos``, each token of field fid counted ``weights[fid]``
+    times in tf, dl and the stored positions."""
     from collections import defaultdict
 
     occ: dict[str, dict[int, list[int]]] = defaultdict(lambda: defaultdict(list))
+    dl: dict[int, int] = {}
     for d, toks in docs.items():
-        for p, t in enumerate(toks):
-            occ[t][d].append(p)
+        fields = toks if isinstance(toks, tuple) else (toks,)
+        dl[d] = sum(len(f) * w for f, w in zip(fields, weights))
+        for fid, ftoks in enumerate(fields):
+            for p, t in enumerate(ftoks):
+                occ[t][d].extend([(fid << 16) | p] * weights[fid])
     readers = {}
     for t, per_doc in occ.items():
         ds = np.array(sorted(per_doc), dtype=np.int64)
         positions = [np.array(per_doc[int(d)], dtype=np.int64) for d in ds]
         tfs = np.array([len(p) for p in positions], dtype=np.int64)
-        dls = np.array([len(docs[int(d)]) for d in ds], dtype=np.int64)
+        dls = np.array([dl[int(d)] for d in ds], dtype=np.int64)
         enc = encode_postings(ds, tfs, dls, positions, block_size=4,
                               avgdl=10.0, k1=1.2, b=0.75)
         row = {"n_docs": enc.n_docs, "docs": enc.docs, "tfs": enc.tfs,
-               "dls": enc.dls, "poss": enc.poss,
+               "dls": enc.dls, "poss": enc.poss, "gen": gen,
                "block_meta": enc.block_meta_rows()}
         readers[t] = [(PostingReader.from_row(row, block_size=4), 1.0)]
     return readers
@@ -204,6 +213,69 @@ def test_phrase_docids_matches_bruteforce():
     assert _phrase_docids(readers, ["a", "a"]).tolist() == [1, 3]
     assert _phrase_docids(readers, ["b", "a"]).tolist() == [2, 3]
     assert _phrase_docids(readers, ["a", "c"]).tolist() == []
+
+
+def test_positional_kernels_match_bruteforce_generations_and_fields():
+    """The aligned-key kernel behind _phrase_docids, _phrase_matches and
+    _exact_attr_docids, checked against a token scan on the shapes it
+    serves: two generations where an in-place replacement's old version is
+    dead under a generation-horizon tombstone, and two fields with
+    positions packed ``fid << 16 | pos`` (a match never spans fields),
+    the second one weighted 3 every other time (its positions stored three
+    times; an aligned start still counts once)."""
+    from search_engine_spark.query import (
+        _exact_attr_docids,
+        _phrase_docids,
+        _phrase_matches,
+    )
+
+    def starts(fields, words):
+        n = len(words)
+        return sum(f[s:s + n] == words
+                   for f in fields for s in range(len(f) - n + 1))
+
+    rng = np.random.default_rng(5)
+    vocab = [f"w{i}" for i in range(5)]
+    for trial in range(40):
+        n_fields = 1 + trial % 2
+        weights = (1, 3) if trial % 4 == 3 else (1, 1)
+
+        def doc():
+            return tuple(
+                [vocab[int(i)] for i in rng.integers(0, len(vocab),
+                                                     rng.integers(1, 12))]
+                for _ in range(n_fields))
+
+        gen0 = {int(d): doc() for d in rng.choice(500, 30, replace=False)}
+        replaced = sorted(int(d) for d in rng.choice(sorted(gen0), 8,
+                                                     replace=False))
+        gen1 = {d: doc() for d in replaced}
+        gen1.update({int(d): doc() for d in rng.choice(
+            np.arange(500, 600), 6, replace=False)})
+        pt = (np.array(replaced, dtype=np.int64),
+              np.ones(len(replaced), dtype=np.int64))
+        r0 = _readers_from_docs(gen0, 0, weights)
+        r1 = _readers_from_docs(gen1, 1, weights)
+        readers = {t: r0.get(t, []) + r1.get(t, []) for t in set(r0) | set(r1)}
+        live = {**gen0, **gen1}  # the replacement is the live version
+        dl = {d: sum(len(f) * w for f, w in zip(fs, weights))
+              for d, fs in live.items()}
+        for plen in (1, 2, 3):
+            words = [vocab[int(i)] for i in rng.integers(0, len(vocab), plen)]
+            want = {d: starts(f, words) for d, f in live.items()}
+            want = {d: c for d, c in sorted(want.items()) if c}
+            assert _phrase_docids(readers, words, pt).tolist() == list(want)
+            docs, counts, dls = _phrase_matches(readers, words, pt)
+            assert docs.tolist() == list(want), (trial, words)
+            assert counts.tolist() == list(want.values()), (trial, words)
+            assert dls.tolist() == [dl[d] for d in want]
+            prefix = sorted(d for d, f in live.items()
+                            if any(x[:plen] == words for x in f))
+            whole = [d for d in prefix if dl[d] == plen]
+            assert _exact_attr_docids(readers, words, False,
+                                      pt).tolist() == prefix, (trial, words)
+            assert _exact_attr_docids(readers, words, True,
+                                      pt).tolist() == whole, (trial, words)
 
 
 def test_segmented_run_codec_roundtrip():

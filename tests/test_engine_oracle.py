@@ -147,7 +147,7 @@ def test_score_details_sum_equals_score(search_index):
             "web search engine", k=10, mode="exhaustive", **kw
         ))
         det = search_index.score_details(
-            "web search engine", k=10, mode="exhaustive", **kw
+            "web search engine", k=10, **kw
         ).collect()
         sums: dict[int, float] = {}
         for r in det:
@@ -239,8 +239,7 @@ def test_score_details_sum_equals_score_cost_mode(search_index):
     top = {r["docid"]: r["score"]
            for r in search_index.search("search engine", k=5,
                                         mode="exhaustive", **kw).collect()}
-    parts = search_index.score_details("search engine", k=5,
-                                       mode="exhaustive", **kw).collect()
+    parts = search_index.score_details("search engine", k=5, **kw).collect()
     by_doc: dict[int, float] = {}
     for r in parts:
         by_doc[r["docid"]] = by_doc.get(r["docid"], 0.0) + r["part"]
@@ -340,7 +339,7 @@ def test_score_details_sum_equals_score_exactness(spark, tmp_path):
     kw = {"exactness": 2.0}
     top = {r["docid"]: r["score"]
            for r in ix.search("table join", k=3, mode="exhaustive", **kw).collect()}
-    parts = ix.score_details("table join", k=3, mode="exhaustive", **kw).collect()
+    parts = ix.score_details("table join", k=3, **kw).collect()
     by_doc: dict[int, float] = {}
     for r in parts:
         by_doc[r["docid"]] = by_doc.get(r["docid"], 0.0) + r["part"]

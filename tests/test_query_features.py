@@ -322,6 +322,20 @@ def test_derivation_penalties_in_plan(search_index):
     assert abs(plan3.term_weights["index"] - bm25_idf(n, df_index)) < 1e-12
 
 
+def test_plan_term_order_is_query_order(search_index, monkeypatch):
+    """Scoring terms keep the query's first-seen word order, on the local
+    dictionary and on the Spark dictionary lookup alike, so a plan (and
+    the summation order of its scores) does not depend on the hash seed."""
+    words = "web table spark search engine join query web".split()
+    d = search_index._local_dict()
+    want = [w for w in dict.fromkeys(words) if w in d]
+    assert len(want) >= 5
+    assert list(search_index.plan(" ".join(words)).term_weights) == want
+    monkeypatch.setattr(search_index, "_dict", None)
+    monkeypatch.setattr(search_index, "_local_dict_max_terms", -1)
+    assert list(search_index._lookup_exact(words)) == want
+
+
 def test_best_window_crop_centers_on_cluster(spark):
     """Reference Matcher best-window: the crop must center on the window
     with the most distinct query terms, not the first match."""
@@ -550,7 +564,7 @@ def test_phrase_synonym_score_details_sum(syn_index):
     for kw in ({}, {"matching_strategy": "last"}):
         res = dict(ix.search_list("newyork pizza", k=5, mode="exhaustive",
                                   synonyms={"newyork": ["new york"]}, **kw))
-        det = ix.score_details("newyork pizza", k=5, mode="exhaustive",
+        det = ix.score_details("newyork pizza", k=5,
                                synonyms={"newyork": ["new york"]},
                                **kw).collect()
         sums: dict[int, float] = {}

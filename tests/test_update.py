@@ -753,3 +753,28 @@ def test_filtered_driver_route_rank_identical_to_cluster(spark, churned_index,
     fr = {r["docid"] for r in ix.search_rows("banana", k=50,
                                              filter_ast={"lang": "fr"})}
     assert fr and not fr & {5, 8, 20}
+
+
+def test_score_details_on_mutated_index(spark, churned_index):
+    """score_details reads the exhaustive scorer's own parts, so on an index
+    with three generations, full deletes and in-place replacements it
+    returns exactly the search top-k, and each doc's parts sum to its
+    score, for every score-shaping feature."""
+    import math
+
+    from search_engine_spark.query import SearchIndex
+
+    ix = SearchIndex(spark, churned_index)
+    assert len(ix._deleted) and ix._partial_tombs is not None
+    q = "banana recipe spark query"
+    for kw in ({}, {"proximity": 1.0},
+               {"proximity": 1.0, "proximity_mode": "cost"},
+               {"exactness": 2.0}, {"matching_strategy": "last"}):
+        top = {r["docid"]: r["score"]
+               for r in ix.search(q, k=10, **kw).collect()}
+        sums: dict[int, float] = {}
+        for r in ix.score_details(q, k=10, **kw).collect():
+            sums[r["docid"]] = sums.get(r["docid"], 0.0) + r["part"]
+        assert top and set(sums) == set(top), kw
+        for d, s in top.items():
+            assert math.isclose(sums[d], s, rel_tol=1e-9), (kw, d, s, sums[d])

@@ -1082,9 +1082,10 @@ _BATCH_QUERIES = [
 
 
 def _q_search_many(spark, sf_dir):
-    """Batch retrieval: 5 queries scored in ONE Spark job — union postings
-    scanned once, per-term decode shared across queries inside each shard
-    task, one window merge (SearchIndex.search_many; the offline
+    """Batch retrieval: 5 queries, each planned and scored exactly as
+    search_rows does, over one read of the batch's union postings — on
+    the driver when they fit its point-read budget, else in one shard job
+    with a window merge (SearchIndex.search_many; the offline
     query-log/eval-set companion to the per-query serving path)."""
     idx = _index(spark, sf_dir)
     return idx.search_many(_BATCH_QUERIES, k=10).select(

@@ -171,9 +171,9 @@ def main() -> None:
     timed("q_highlight", lambda: ix.highlight_results(
         ix.search("table join", k=5, mode="exhaustive"),
         "table join", crop_length=12).collect())
-    # batch retrieval: 32 queries in ONE job (union postings scanned once,
-    # per-term decode shared across queries) — compare against 32x the
-    # per-query q_bm25_exhaustive wall for the amortization story
+    # batch retrieval: 32 queries, each scored as search_rows scores it,
+    # over one read of the batch's union postings — compare against 32x
+    # the per-query q_search_rows wall
     batch_qs = [
         (i, q) for i, q in enumerate(
             ["table join merge", "hash group sort", "scan data filter",

@@ -68,6 +68,7 @@ from search_engine_spark.codecs import (
 )
 from search_engine_spark.config import IndexConfig, IndexSettings
 from search_engine_spark.index import (
+    STAGES,
     CheckpointLog,
     IndexPaths,
     read_meta,
@@ -1097,10 +1098,17 @@ def build_index(
     ``IndexSettings()``.
 
     ``fail_after='<stage>'`` injects a failure right after that stage commits
-    (kill-and-resume test harness). A resumed build skips every stage whose
-    checkpoint manifest exists — per bucket for the postings stage.
+    (kill-and-resume test harness): any stage of ``STAGES`` but 'finalize',
+    or ``'postings:bucket=<b>'`` for one postings bucket; another name
+    raises ValueError. A resumed build skips every stage whose checkpoint
+    manifest exists — per bucket for the postings stage.
     """
     config = config or IndexConfig()
+    points = [*STAGES[:-1],
+              *(f"postings:bucket={b}" for b in range(config.num_buckets))]
+    if fail_after is not None and fail_after not in points:
+        raise ValueError(
+            f"fail_after must be one of {points}, got {fail_after!r}")
     paths = IndexPaths(index_dir)
     paths.ensure()
     build_id = build_id or uuid.uuid4().hex[:12]

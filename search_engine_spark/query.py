@@ -26,10 +26,12 @@ top-k):
    ``driver_exec_max_postings`` is scored on the driver over pyarrow point
    reads (``_driver_gate``); the rest per shard (``groupBy('shard')``, or
    ``cogroup`` with the filter's allowed docids) inside an Arrow-batched
-   pandas UDF;
+   pandas UDF. ``search_many`` runs that ``_topk`` per ``plan()`` over one
+   read of its batch's term union (``_batch_topk``), on either route;
 4. global merge: ``orderBy(score desc, docid asc).limit(k)`` over <=
    num_shards*k candidate rows, then join display columns back from
    doc_stats (reference O2 ``obkv_to_json``, ``src/lib.rs:209-234``).
+   Driver-built result frames come from ``_local_df`` (Arrow, no worker).
 
 Total order everywhere (heap, bounds, merge): (score desc, docid asc).
 WAND prunes only on STRICT inequality so bound==threshold ties are still
@@ -75,7 +77,6 @@ from search_engine_spark.query_parse import (
 )
 
 RESULT_SCHEMA = "docid long, score double"
-OUT_SCHEMA = "rank int, docid long, pk string, score double"
 
 
 def bm25_idf(n_docs: int, df: int) -> float:
@@ -85,6 +86,22 @@ def bm25_idf(n_docs: int, df: int) -> float:
 def _quote_ident(name: str) -> str:
     """Backtick-quote a column name for Spark SQL expressions."""
     return "`" + name.replace("`", "``") + "`"
+
+
+def _local_df(spark: SparkSession, rows: list[tuple], ddl: str) -> DataFrame:
+    """A driver-side result DataFrame of ``rows`` with the DDL schema
+    ``ddl``, handed to Spark as one Arrow table. A list of tuples would be
+    parallelized to Python workers, so its first action pays a Spark job
+    (~280 ms, even for no rows); the Arrow table needs no worker and does
+    not depend on the Arrow conf."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    schema = to_arrow_schema(StructType.fromDDL(ddl))
+    cols = list(zip(*rows)) or [()] * len(schema)
+    return spark.createDataFrame(pa.table(
+        [pa.array(c, type=f.type) for c, f in zip(cols, schema)], schema=schema))
 
 
 def _plan_terms(plan: "QueryPlan") -> list[str]:
@@ -889,13 +906,12 @@ class SearchIndex:
     ) -> list[dict]:
         """Serving-path search: identical semantics and ranking to
         ``search()`` but returns plain dicts. On the driver point-read path
-        no Spark DataFrame is materialized at all (collecting even a 10-row
-        local DataFrame costs ~0.35s of py4j round-trips — measured at 4M
-        docs, where the query itself runs in ~0.25s); cluster-path queries
-        collect their k-bounded result. The route is ``_driver_gate``'s,
-        the same rule ``execute(execution='auto')`` applies: filtered
-        queries take the driver route too when ``sum(df) + n_docs`` fits
-        ``driver_exec_max_postings``."""
+        no Spark DataFrame is materialized at all (``search()`` wraps the
+        same rows in a ``_local_df``, tens of ms on a small index);
+        cluster-path queries collect their k-bounded result. The route is
+        ``_driver_gate``'s, the same rule ``execute(execution='auto')``
+        applies: filtered queries take the driver route too when
+        ``sum(df) + n_docs`` fits ``driver_exec_max_postings``."""
         plan = self.plan(query, k, **plan_kw)
         if not plan.term_weights:
             return []
@@ -919,162 +935,96 @@ class SearchIndex:
         k: int = 10,
         match_all: bool = False,
     ) -> DataFrame:
-        """Batch retrieval: score MANY queries in ONE Spark job.
+        """Batch retrieval: every query scored exactly as
+        ``search_rows(text, k, match_all=match_all)`` scores it.
 
-        The per-query ``search()`` path costs one job per query — right for
-        serving, wrong for offline workloads (relevance eval over a query
-        log, A/B score dumps, training-label generation) where 10^4-10^6
-        queries hit the same index. Batch shape: the union of all query
-        terms is scanned ONCE (bucket/row-group-pruned like ``search()``),
-        each shard task decodes every term ONCE and reuses the decoded
-        (docid, contribution) arrays across all queries containing that
-        term — head terms shared by thousands of queries are decoded once
-        per shard instead of once per query — then emits a per-(query,
-        shard) top-k. The global merge is a single window over
-        <= n_queries * num_shards * k rows. Net: one job, two exchanges
-        (shard group + merge), postings decoded exactly once.
+        Each query is planned by ``plan()`` (the full query grammar and the
+        index's persisted settings, e.g. ``matching_strategy``) and scored
+        by ``_topk`` with the scorer ``_pick_algo`` picks under mode 'auto'
+        (``_batch_topk``). Planning costs what it costs in ``search_rows``:
+        nothing while the dictionary is pinned on the driver, one
+        dictionary job per ``plan()`` above ``_local_dict_max_terms``
+        terms. Queries without a scoring term return no rows.
+
+        The union of every plan's terms picks one of two branches:
+
+        - driver: when its postings fit ``driver_exec_max_postings``, they
+          are point-read once with pyarrow, every query is scored
+          in-process and one ``_pk_lookup`` serves all result docids; no
+          Spark job runs;
+        - cluster: otherwise one ``groupby('shard').applyInPandas`` over
+          the union's postings; each shard task builds its readers once
+          and scores every query, a window over <= n_queries * num_shards
+          * k rows merges the shard top-k and a broadcast join adds pk.
 
         ``queries``: list of ``(query_id, text)`` pairs or a DataFrame with
-        columns ``(query_id, query)`` (collected — the query side is the
-        small side by definition; memory is O(total query terms)).
-
-        Batch mode scores the plain-word BM25 disjunction (or conjunction
-        with ``match_all``) with exact dictionary terms — rank-identical to
-        ``search(text, mode=..)`` with derivations off (tested). Query
-        grammar constructs (phrases, negation, prefix/typo markers) raise:
-        per-query planning belongs to the serving path.
+        columns ``(query_id, query)`` (collected: the query side is the
+        small side by definition). query_ids must be unique; they type the
+        ``query_id`` column on every return (long when all are ints, else
+        string), so empty and non-empty batches union.
 
         -> DataFrame(query_id, rank int, docid long, pk, score double),
         ties (score desc, docid asc) per query; rank 1..<=k.
         """
         if isinstance(queries, DataFrame):
             queries = [(r[0], r[1]) for r in queries.select("query_id", "query").collect()]
-        parsed: list[tuple[object, list[str]]] = []
-        for qid, text in queries:
-            pq = parse_query(text)
-            if pq.phrases or pq.negated or pq.prefixes or pq.typos:
-                raise ValueError(
-                    f"search_many scores plain word queries; query {qid!r} "
-                    "uses phrase/negation/prefix/typo syntax — use search()"
-                )
-            # distinct terms, first-seen order (BM25 scores each term once)
-            parsed.append((qid, list(dict.fromkeys(pq.words))))
-
-        if len({qid for qid, _ in parsed}) != len(parsed):
+        qids = [qid for qid, _ in queries]
+        if len(set(qids)) != len(qids):
             seen: set = set()
-            dup = next(q for q, _ in parsed if q in seen or seen.add(q))
+            dup = next(q for q in qids if q in seen or seen.add(q))
             raise ValueError(
                 f"search_many requires unique query_ids; {dup!r} appears "
                 "more than once (duplicate ids would silently merge into "
                 "one interleaved ranking)"
             )
-        # result schema is fixed up front so EVERY return — including the
-        # two empty-batch shortcuts — is union-compatible for callers
-        qid_is_int = all(isinstance(q, (int, np.integer)) for q, _ in parsed)
+        qid_is_int = all(isinstance(q, (int, np.integer)) for q in qids)
         qid_type = "long" if qid_is_int else "string"
-        pk_t = self._doc_stats.schema["pk"].dataType.simpleString()
-        out_schema = (
-            f"query_id {qid_type}, rank int, docid long, pk {pk_t}, "
-            "score double"
-        )
-
-        union = sorted({w for _, ws in parsed for w in ws})
-        if not union:
-            return self.spark.createDataFrame([], out_schema)
-        # one dictionary job for the whole batch (vs one point read per
-        # query term in plan()); idf over the indexed count like search()
-        df_map = {
-            r["term"]: int(r["df"])
-            for r in self._terms.filter(F.col("term").isin(union))
-            .select("term", "df").collect()
-        }
-        weights = {t: bm25_idf(self.n_docs_indexed, d) for t, d in df_map.items()}
-
-        # per-query indexed terms; match_all with an unindexed word matches
-        # nothing (reference TermsMatchingStrategy::All semantics)
-        batch: list[tuple[object, list[str]]] = []
-        for qid, ws in parsed:
-            hit = [w for w in ws if w in df_map]
-            if not hit or (match_all and len(hit) < len(ws)):
-                continue
-            batch.append((qid if qid_is_int else str(qid), hit))
-        if not batch:
-            return self.spark.createDataFrame([], out_schema)
-
+        plans = [
+            (int(qid) if qid_is_int else str(qid), plan)
+            for qid, text in queries
+            if (plan := self.plan(text, k, match_all=match_all)).term_weights
+        ]
+        union = sorted({t for _, p in plans for t in _plan_terms(p)})
         avgdl, k1, b = self.avgdl, self.config.k1, self.config.b
-        block_size = self.config.block_size
-        deleted_bc, part_bc = self._deleted_bc, self._partial_bc
-        kk = int(k)
-        mall = bool(match_all)
-        wt = dict(weights)
+        exact_dl_check = not self.config.field_cols
 
-        def score_shard(pdf: pd.DataFrame) -> pd.DataFrame:
-            tomb = deleted_bc.value if deleted_bc is not None else None
-            if tomb is not None and not len(tomb):
-                tomb = None
-            pt = part_bc.value if part_bc is not None else None
-            # decode each term ONCE (concat across segment generations,
-            # tombstones out), shared by every query that uses it
-            contrib: dict[str, tuple[np.ndarray, np.ndarray]] = {}
-            for row in pdf.to_dict("records"):
-                r = PostingReader.from_row(row, block_size)
-                docids, tfs, dls = _live_decode(r, pt)
-                if tomb is not None and len(docids):
-                    m = ~np.isin(docids, tomb)
-                    docids, tfs, dls = docids[m], tfs[m], dls[m]
-                if not len(docids):
-                    continue
-                c = bm25_impact(tfs, dls, avgdl, k1, b, weight=wt[row["term"]])
-                prev = contrib.get(row["term"])
-                contrib[row["term"]] = (
-                    (docids, c) if prev is None
-                    else (np.concatenate([prev[0], docids]),
-                          np.concatenate([prev[1], c]))
-                )
-            out_q, out_d, out_s = [], [], []
-            for qid, terms in batch:
-                # shard == docid % num_shards: ALL postings of a docid live
-                # in one shard, so shard-local term presence IS global
-                # presence — match_all needs no cross-shard pass
-                arrs = [contrib[t] for t in terms if t in contrib]
-                if not arrs or (mall and len(arrs) < len(terms)):
-                    continue
-                docs = np.concatenate([a[0] for a in arrs])
-                vals = np.concatenate([a[1] for a in arrs])
-                uniq, inv = np.unique(docs, return_inverse=True)
-                agg = np.zeros(len(uniq), dtype=np.float64)
-                np.add.at(agg, inv, vals)
-                if mall:
-                    # docids unique per term (disjoint across generations)
-                    # -> occurrence count == matched-term count
-                    keep = np.bincount(inv) == len(arrs)
-                    uniq, agg = uniq[keep], agg[keep]
-                if not len(uniq):
-                    continue
-                top = np.lexsort((uniq, -agg))[: min(kk, len(uniq))]
-                out_q.extend([qid] * len(top))
-                out_d.extend(uniq[top].tolist())
-                out_s.extend(agg[top].tolist())
-            return pd.DataFrame(
-                {
-                    "query_id": pd.Series(
-                        out_q, dtype="int64" if qid_is_int else "object"
-                    ),
-                    "docid": pd.Series(out_d, dtype="int64"),
-                    "score": pd.Series(out_s, dtype="float64"),
-                }
+        if sum(self._lookup_exact(union).values()) <= self.driver_exec_max_postings:
+            hits = _batch_topk(
+                self._readers_for(union) if plans else {}, plans,
+                self._deleted if len(self._deleted) else None,
+                self._partial_tombs, k, avgdl, k1, b, exact_dl_check,
+            )
+            pk_map = self._pk_lookup([d for _, _, d, _ in hits]) if hits else {}
+            # rank typed like the cluster branch's row_number (non-null)
+            return self._rows_to_df(
+                [(q, r, d, pk_map.get(d), s) for q, r, d, s in hits],
+                f"query_id {qid_type}, rank int not null",
             )
 
-        pq_df = self._postings_for(union)
-        shard_topk = pq_df.groupby("shard").applyInPandas(
-            score_shard, schema=f"query_id {qid_type}, docid long, score double"
+        block_size, gen_avgdl = self.config.block_size, self.gen_avgdl
+        deleted_bc, part_bc = self._deleted_bc, self._partial_bc
+
+        def shard_topk(pdf: pd.DataFrame) -> pd.DataFrame:
+            readers = _readers_from_rows(pdf.to_dict("records"), block_size,
+                                         avgdl, gen_avgdl)
+            rows = _batch_topk(
+                readers, plans,
+                deleted_bc.value if deleted_bc is not None else None,
+                part_bc.value if part_bc is not None else None,
+                k, avgdl, k1, b, exact_dl_check,
+            )
+            return _pairs_frame([(q, d, s) for q, _r, d, s in rows],
+                                ("query_id",))
+
+        shard_rows = self._postings_for(union).groupby("shard").applyInPandas(
+            shard_topk, schema=f"query_id {qid_type}, docid long, score double"
         )
         w = Window.partitionBy("query_id").orderBy(
             F.col("score").desc(), F.col("docid").asc()
         )
         ranked = (
-            shard_topk.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= kk)
+            shard_rows.withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= k)
         )
         # pk lookup: ranked is <= n_queries * k rows — broadcast it so the
         # join streams doc_stats without a shuffle (inner ≡ left here:
@@ -1129,20 +1079,22 @@ class SearchIndex:
         sort last (reference: missing-values bucket last).
         """
         base = self._doc_stats
+        cols = ["docid", "pk", *[c for c, _ in sort]]
         if filter_ast is not None:
             require_fields(filter_ast, base.columns)
             base = base.filter(to_column(filter_ast))
         if query:
             p = self.plan(query, k)
             if not p.term_weights:
-                return self.spark.createDataFrame([], "rank int, docid long, pk string")
+                return _local_df(self.spark, [], ", ".join(["rank int"] + [
+                    f"{_quote_ident(c)} {base.schema[c].dataType.simpleString()}"
+                    for c in cols]))
             base = base.join(self.matching_docids(list(p.term_weights)), "docid")
         order = [
             (F.col(c).asc_nulls_last() if d.lower().startswith("asc")
              else F.col(c).desc_nulls_last())
             for c, d in sort
         ] + [F.col("docid").asc()]
-        cols = ["docid", "pk", *[c for c, _ in sort]]
         w = Window.orderBy(*order)
         out = (
             base.select(*cols)
@@ -1228,9 +1180,9 @@ class SearchIndex:
             pq.words + pq.typos + pq.prefixes
             + [w for ph in pq.phrases for w in ph]
         ))
-        out_schema = "term string, suggestion string, dist int, df long"
         if not words:
-            return self.spark.createDataFrame([], out_schema)
+            return _local_df(self.spark, [],
+                             "term string, suggestion string, dist int, df long")
         budgets = [
             (
                 w,
@@ -1240,7 +1192,7 @@ class SearchIndex:
             )
             for w in words
         ]
-        qdf = self.spark.createDataFrame(budgets, "term string, budget int")
+        qdf = _local_df(self.spark, budgets, "term string, budget int")
         dist = F.levenshtein("suggestion", "term")
         cand = (
             self._terms.select(F.col("term").alias("suggestion"), "df")
@@ -1281,9 +1233,8 @@ class SearchIndex:
         module docstring; 'driver' raises ValueError for those). A filter
         naming a field doc_stats lacks raises ValueError on every route.
         """
-        spark = self.spark
         if not plan.term_weights:
-            return spark.createDataFrame([], OUT_SCHEMA)
+            return self._rows_to_df([])
 
         if execution != "cluster":
             rows = self._driver_gate(plan, mode, offset, execution, filter_ast)
@@ -1505,8 +1456,7 @@ class SearchIndex:
         call, with the scorer ``algo``. ``filter_expr`` (``filters.to_arrow``)
         restricts scoring to ``_allowed_docids``, like the cluster route's
         cogroup with doc_stats. -> (rank, docid, pk, score) tuples; latency
-        is ~ms instead of a Spark job (``search_rows`` exposes them without
-        the ~0.35s py4j cost of materializing even a 10-row DataFrame)."""
+        is ~ms instead of a Spark job."""
         allowed = (None if filter_expr is None
                    else self._allowed_docids(filter_expr))
         readers = self._readers_for(all_terms)
@@ -1532,13 +1482,10 @@ class SearchIndex:
             for i, (d, s) in enumerate(pairs)
         ]
 
-    def _rows_to_df(self, rows: list[tuple]) -> DataFrame:
-        if not rows:
-            return self.spark.createDataFrame([], OUT_SCHEMA)
+    def _rows_to_df(self, rows: list[tuple], head: str = "rank int") -> DataFrame:
         pk_t = self._doc_stats.schema["pk"].dataType.simpleString()
-        return self.spark.createDataFrame(
-            rows, f"rank int, docid long, pk {pk_t}, score double"
-        )
+        return _local_df(self.spark, rows,
+                         f"{head}, docid long, pk {pk_t}, score double")
 
     def highlight_results(
         self,
@@ -1648,9 +1595,7 @@ class SearchIndex:
                 sel = np.isin(pdocs, top) & (values != 0)
                 rows.extend((int(d), label, float(v))
                             for d, v in zip(pdocs[sel], values[sel]))
-        return self.spark.createDataFrame(
-            rows, "docid long, term string, part double"
-        )
+        return _local_df(self.spark, rows, "docid long, term string, part double")
 
     def fetch_documents(self, results: DataFrame) -> DataFrame:
         """Join ranked results back to the canonical document snapshot
@@ -1767,8 +1712,8 @@ def hybrid_search(
             scores.get(r["docid"], 0.0) + semantic_ratio * r["sem"] / sem_den
         )
     top = sorted(scores.items(), key=lambda t: (-t[1], t[0]))[:k]
-    return ix.spark.createDataFrame(
-        [(i + 1, int(d), float(s)) for i, (d, s) in enumerate(top)],
+    return _local_df(
+        ix.spark, [(i + 1, int(d), float(s)) for i, (d, s) in enumerate(top)],
         "rank int, docid long, score double",
     )
 
@@ -1817,8 +1762,8 @@ def hybrid_search_rrf(
     ):
         scores[r["docid"]] = scores.get(r["docid"], 0.0) + 1.0 / (rrf_k + rank)
     top = sorted(scores.items(), key=lambda t: (-t[1], t[0]))[:k]
-    return ix.spark.createDataFrame(
-        [(i + 1, int(d), float(s)) for i, (d, s) in enumerate(top)],
+    return _local_df(
+        ix.spark, [(i + 1, int(d), float(s)) for i, (d, s) in enumerate(top)],
         "rank int, docid long, score double",
     )
 
@@ -1861,14 +1806,9 @@ def make_shard_scorer(
     if deleted is not None and isinstance(deleted, np.ndarray) and not len(deleted):
         deleted = None
 
-    def _empty() -> pd.DataFrame:
-        return pd.DataFrame(
-            {"docid": pd.Series([], dtype="int64"), "score": pd.Series([], dtype="float64")}
-        )
-
     def scorer(left: pd.DataFrame, right: pd.DataFrame | None = None) -> pd.DataFrame:
         if len(left) == 0:
-            return _empty()
+            return _pairs_frame([])
         tomb = deleted.value if hasattr(deleted, "value") else deleted
         if tomb is not None and not len(tomb):
             tomb = None
@@ -1884,16 +1824,17 @@ def make_shard_scorer(
                 else np.zeros(0, dtype=np.int64)
             )
 
-        pairs = _topk(readers, plan, algo, plan.k, avgdl, k1, b, tomb,
-                      allowed, pt, exact_dl_check)
-        if not pairs:
-            return _empty()
-        d, s = zip(*pairs)
-        return pd.DataFrame(
-            {"docid": pd.Series(d, dtype="int64"), "score": pd.Series(s, dtype="float64")}
-        )
+        return _pairs_frame(_topk(readers, plan, algo, plan.k, avgdl, k1, b,
+                                  tomb, allowed, pt, exact_dl_check))
 
     return scorer
+
+
+def _pairs_frame(rows: list[tuple], head: tuple[str, ...] = ()) -> pd.DataFrame:
+    """A shard task's top-k rows -> its pandas result frame: ``head``
+    columns, then (docid int64, score float64), typed even when empty."""
+    return pd.DataFrame(rows, columns=[*head, "docid", "score"]).astype(
+        {"docid": "int64", "score": "float64"})
 
 
 def _readers_from_rows(
@@ -1946,6 +1887,30 @@ def _topk(
     )
     idx = np.lexsort((docs, -scores))[:k]
     return [(int(docs[i]), float(scores[i])) for i in idx]
+
+
+def _batch_topk(
+    readers: dict[str, list[tuple[PostingReader, float]]],
+    plans: list[tuple[object, QueryPlan]],
+    deleted: np.ndarray | None,
+    partial_tombs: tuple | None,
+    k: int,
+    avgdl: float,
+    k1: float,
+    b: float,
+    exact_dl_check: bool,
+) -> list[tuple]:
+    """``search_many``'s scoring loop, shared by its driver branch and its
+    shard tasks: each ``(query_id, plan)`` runs ``_topk`` over the shared
+    ``readers`` with the scorer ``_pick_algo`` picks under mode 'auto',
+    as ``search_rows`` does. -> (query_id, rank, docid, score) rows."""
+    out = []
+    for qid, plan in plans:
+        algo = _pick_algo("auto", plan, False, partial_tombs is not None)
+        pairs = _topk(readers, plan, algo, k, avgdl, k1, b, deleted, None,
+                      partial_tombs, exact_dl_check)
+        out.extend((qid, i + 1, d, s) for i, (d, s) in enumerate(pairs))
+    return out
 
 
 def _last_fold(

@@ -29,6 +29,28 @@ def feature_index(spark, tmp_path_factory):
     return SearchIndex(spark, d), spark.createDataFrame(pdf)
 
 
+def test_empty_results_typed_like_hits(feature_index):
+    """Empty results carry doc_stats' pk type (bigint here), like hits, so
+    callers can union them: a no-term query, a query whose filter matches
+    nothing, and a no-term search_sorted."""
+    ix, _ = feature_index
+    hit = ix.search("york")
+    misses = [ix.search("zzqqnotaword"),
+              ix.search("york", filter_ast={"lang": "zz"})]
+    assert hit.count() and not any(m.count() for m in misses)
+    shape = [(f.name, f.dataType) for f in hit.schema.fields]
+    for m in misses:
+        assert [(f.name, f.dataType) for f in m.schema.fields] == shape
+        assert hit.unionByName(m).count() == hit.count()
+    sort = [("rating", "desc")]
+    sorted_hit = ix.search_sorted(sort, query="york")
+    sorted_miss = ix.search_sorted(sort, query="zzqqnotaword")
+    assert [(f.name, f.dataType) for f in sorted_miss.schema.fields] == [
+        (f.name, f.dataType) for f in sorted_hit.schema.fields]
+    assert sorted_miss.schema["pk"].dataType == hit.schema["pk"].dataType
+    assert sorted_hit.unionByName(sorted_miss).count() == sorted_hit.count()
+
+
 def test_pagination_slices_global_ranking(feature_index):
     ix, _ = feature_index
     full = ix.search("new york pizza", k=5).collect()
@@ -669,15 +691,6 @@ def test_search_many_dataframe_input_and_unknown_terms(search_index, spark):
     qids = {r["query_id"] for r in rows}
     assert qids == {"a"}  # no-term query contributes no rows
     assert all(isinstance(r["query_id"], str) for r in rows)
-
-
-def test_search_many_rejects_query_syntax(search_index):
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        search_index.search_many([(0, '"exact phrase"')])
-    with _pytest.raises(ValueError):
-        search_index.search_many([(0, "web -engine")])
 
 
 def test_search_many_rejects_duplicate_query_ids(search_index):

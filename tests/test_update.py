@@ -778,3 +778,65 @@ def test_score_details_on_mutated_index(spark, churned_index):
         assert top and set(sums) == set(top), kw
         for d, s in top.items():
             assert math.isclose(sums[d], s, rel_tol=1e-9), (kw, d, s, sums[d])
+
+
+def _batch_vs_rows(spark, ix, queries, group, **kw):
+    """search_many over ``queries`` -> (per-query rows, per-query
+    search_rows rows, Spark jobs search_many ran, result schema), rows as
+    (rank, docid, pk, 9-decimal score)."""
+    def key(rows):
+        return [(r["rank"], r["docid"], r["pk"], round(r["score"], 9))
+                for r in rows]
+
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        res = ix.search_many(list(enumerate(queries)), k=10, **kw)
+        got_rows = res.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    by: dict[int, list] = {}
+    for r in sorted(got_rows, key=lambda r: (r["query_id"], r["rank"])):
+        by.setdefault(r["query_id"], []).append(r)
+    got = [key(by.get(i, [])) for i in range(len(queries))]
+    want = [key(ix.search_rows(q, k=10, **kw)) for q in queries]
+    return got, want, jobs, res.schema
+
+
+def test_search_many_equals_search_rows(spark, churned_index, index_dir):
+    """search_many plans every query with plan() and scores it with the
+    serving kernels, so each query's rows equal search_rows' on both
+    branches (driver point read; one shard job when the batch's postings
+    exceed driver_exec_max_postings), for the full query grammar, on an
+    index with three generations, full and generation-horizon tombstones;
+    and it honours the index settings (matching_strategy='last')."""
+    from dataclasses import replace
+
+    from search_engine_spark.query import SearchIndex
+
+    ix = SearchIndex(spark, churned_index)
+    assert len(ix._deleted) and ix._partial_tombs is not None
+    ix._local_dict()  # plan() then runs no Spark job
+    queries = ["banana recipe spark", '"banana recipe"', "spark -query",
+               "opti*", "planer~", "zzqqnotaword", "window zzqqnotaword",
+               "stream shuffle join"]
+    schemas = set()
+    for budget, driver in ((ix.driver_exec_max_postings, True), (0, False)):
+        ix.driver_exec_max_postings = budget
+        for match_all in (False, True):
+            got, want, jobs, schema = _batch_vs_rows(
+                spark, ix, queries, f"many-{budget}-{match_all}",
+                match_all=match_all)
+            assert got == want, (budget, match_all)
+            assert (jobs == 0) == driver, (budget, match_all, jobs)
+            assert any(want) and not want[5]
+            schemas.add(schema.json())
+    assert len(schemas) == 1  # both branches, nullability included
+    last = SearchIndex(spark, index_dir)
+    last.settings = replace(last.settings, matching_strategy="last")
+    queries = ["web search zzqqnotaword", "crawl data page", "the engine"]
+    for budget in (last.driver_exec_max_postings, 0):
+        last.driver_exec_max_postings = budget
+        got, want, _, _ = _batch_vs_rows(spark, last, queries, f"last-{budget}")
+        assert got == want and all(want), budget

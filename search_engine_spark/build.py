@@ -34,7 +34,9 @@ Pipeline (each stage checkpointed, see ``index.py``):
    stays ~config.encode_group_postings postings — segments are
    byte-identical either way since a (term, shard) posting list never
    crosses groups.
-6. ``finalize``  — meta.json commit (the "snapshot publish").
+6. ``finalize``  — meta.json commit (the "snapshot publish"), then the
+   term_doc spill is removed: a finished index serves, appends and
+   compacts from its postings alone.
 
 Full-data exchanges in the whole build: the stage-1 range shuffle and the
 stage-5 groupBy(shard) — everything else is map-side or metadata.
@@ -43,6 +45,7 @@ stage-5 groupBy(shard) — everything else is map-side or metadata.
 from __future__ import annotations
 
 import os
+import shutil
 import threading
 import time
 import uuid
@@ -396,6 +399,27 @@ def _binary_runs(buf: bytes, byte_offsets: np.ndarray) -> "object":
     )
 
 
+def _blob_flat(tbl, name: str) -> np.ndarray:
+    """Concatenated value bytes of a (never-null) binary column of an Arrow
+    table or record batch, in row order, as uint8 — zero-copy from the
+    Arrow buffers. Varint streams are self-delimiting, so decoding the
+    concatenation decodes every row's run in order."""
+    import pyarrow as pa
+
+    arr = tbl.column(name)
+    if isinstance(arr, pa.ChunkedArray):
+        arr = arr.combine_chunks()
+    offs_buf = np.frombuffer(arr.buffers()[1], dtype=np.int32)
+    data_buf = arr.buffers()[2]
+    data = (
+        np.frombuffer(data_buf, dtype=np.uint8)
+        if data_buf is not None else np.zeros(0, np.uint8)
+    )
+    start = int(offs_buf[arr.offset])
+    end = int(offs_buf[arr.offset + len(arr)])
+    return data[start:end]
+
+
 def make_extract_fn(config: IndexConfig):
     """mapInArrow extractor: (docid, text) batches -> (term, shard) array rows.
 
@@ -720,24 +744,6 @@ def make_encode_fn(config: IndexConfig, avgdl: float, lineage_dir: str | None = 
     k1, b = config.k1, config.b
     num_buckets = config.num_buckets
     out_schema = _postings_arrow_schema()
-
-    def _blob_flat(tbl, name) -> "np.ndarray":
-        """Concatenated value bytes of a (never-null) binary column, in row
-        order, as uint8 — zero-copy from the Arrow buffers. Varint streams
-        are self-delimiting, so decoding the concatenation decodes every
-        row's run in order."""
-        arr = tbl.column(name)
-        if isinstance(arr, pa.ChunkedArray):
-            arr = arr.combine_chunks()
-        offs_buf = np.frombuffer(arr.buffers()[1], dtype=np.int32)
-        data_buf = arr.buffers()[2]
-        data = (
-            np.frombuffer(data_buf, dtype=np.uint8)
-            if data_buf is not None else np.zeros(0, np.uint8)
-        )
-        start = int(offs_buf[arr.offset])
-        end = int(offs_buf[arr.offset + len(arr)])
-        return data[start:end]
 
     def encode(tbl: "pa.Table") -> "pa.Table":
         if tbl.num_rows == 0:
@@ -1292,9 +1298,7 @@ def build_index(
                    wall_s=time.time() - t0)
         spark.catalog.clearCache()
         if sorted_run_dir is not None:
-            import shutil as _shutil
-
-            _shutil.rmtree(sorted_run_dir, ignore_errors=True)
+            shutil.rmtree(sorted_run_dir, ignore_errors=True)
         if run_extract_fused:
             # extract committed strictly AFTER docs: a crash between the
             # two leaves docs committed + extract pending, and the resume
@@ -1323,7 +1327,12 @@ def build_index(
                    metrics=ex_metrics, wall_s=time.time() - t0)
     maybe_fail("extract")
 
-    term_doc = spark.read.parquet(paths.term_doc)
+    # the spill feeds doc_stats, terms and postings, and finalize removes
+    # it: read it only while one of those stages is still to run
+    spill_stages = ("doc_stats", "terms", *(
+        f"postings:bucket={b}" for b in range(config.num_buckets)))
+    term_doc = (None if all(log.done(s) for s in spill_stages)
+                else spark.read.parquet(paths.term_doc))
 
     # ---- stage 3: doc_stats + scalars ----------------------------------
     if not log.done("doc_stats"):
@@ -1464,6 +1473,7 @@ def build_index(
         "settings": (settings or IndexSettings()).to_dict(),
     }
     write_meta(paths, config, scalars)
+    shutil.rmtree(paths.term_doc, ignore_errors=True)
     if metrics_rows:
         import json
 

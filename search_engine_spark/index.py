@@ -10,8 +10,10 @@ index_dir/
                          #   == reference `documents` DB (src/index.rs:157-158)
   doc_stats/             # (docid, pk, dl, attrs...)  == generalized
                          #   field_id_word_count_docids (src/index.rs:124-125)
-  term_doc/gen=G/bucket=*/   # extraction spill: (term, shard, docid, tf, dl,
-                         #   positions) — the checkpointed intermediate
+  term_doc/gen=G/bucket=*/   # build-time extraction spill: (term, shard,
+                         #   docid, tf, dl, positions) runs — the extract
+                         #   checkpoint, removed at finalize (and by an
+                         #   append once its postings commit)
   terms/gen=G/           # per-generation dictionary: (term, df, cf, max_tf),
                          #   term-sorted per file == words FST
                          #   (src/index.rs:56) + the df/tf stats the

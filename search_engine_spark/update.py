@@ -9,14 +9,16 @@ this module re-expresses the same semantics Lucene-style:
 * ``add_documents``  — ``ReplaceDocuments`` upsert (reference
   ``transform.rs:107-110``): last-write-wins within the batch, existing
   docs with the same pk are tombstoned, the batch becomes a NEW segment
-  generation (``gen=N`` under term_doc/terms/postings). Nothing existing
-  is rewritten.
+  generation (``gen=N`` under terms/postings). Nothing existing is
+  rewritten; the batch's extraction spill is removed once its postings
+  commit.
 * ``delete_documents`` — tombstone by external id (reference
   ``Transform::remove_documents``, ``transform.rs:363-452``).
 * ``compact``        — segment merge: rebuilds a single ``gen=0`` from the
-  union of live term_doc rows (re-tokenization is NOT needed — term_doc is
-  the extraction checkpoint), recomputes doc stats / dictionary / postings
-  with fresh global avgdl, clears tombstones.
+  postings it merges (every generation decoded, dead postings dropped, the
+  live ones re-encoded by the build's encoder at the fresh global avgdl —
+  no re-tokenization), recomputes doc stats / dictionary, clears
+  tombstones. Every store is staged before any live one is swapped.
 
 Query-time consequences (see ``query.py``):
 * docids are disjoint across generations, so per-shard scoring just sees
@@ -29,26 +31,39 @@ Query-time consequences (see ``query.py``):
 
 Scale notes: each append shuffles ONLY the new batch (extract + one
 postings job); tombstones append a docid list. Compaction is the only
-full-data rewrite and reuses the spilled extraction, so its cost is the
+full-data rewrite: a map-side decode of the postings plus the
 shuffle+encode of live postings — no tokenization pass.
 """
 
 from __future__ import annotations
 
+import os
+import shutil
 import time
 
-from pyspark.sql import DataFrame, SparkSession, Window
+import numpy as np
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from search_engine_spark.build import (
     DL_BUCKET,
     POSTINGS_SCHEMA,
+    _binary_runs,
+    _blob_flat,
     _dedupe_last_write_wins,
+    _extract_arrow_schema,
     assign_docids,
     doc_lengths,
     make_encode_fn,
     make_extract_fn,
+    term_doc_schema,
     terms_agg,
+)
+from search_engine_spark.codecs import (
+    delta_decode_runs,
+    delta_encode_runs,
+    varint_decode,
+    varint_encode_runs,
 )
 from search_engine_spark.config import (
     EXTRACTION_AFFECTING,
@@ -74,7 +89,7 @@ DEAD_HORIZON = (1 << 31) - 1
 
 
 def _read_with_gen(spark: SparkSession, path: str) -> DataFrame:
-    """Read docs / doc_stats / term_doc with the ``gen`` column guaranteed:
+    """Read docs / doc_stats / postings with the ``gen`` column guaranteed:
     indexes written before generations existed read as gen 0 — the same
     fallback the query path applies — so mutations work on pre-generation
     indexes instead of raising on the missing column.
@@ -196,8 +211,6 @@ def add_documents(
     n_new = docs_df.count()
 
     # extract ONLY the new docs into term_doc/gen=N
-    from search_engine_spark.build import term_doc_schema
-
     n_extract = config.extract_partitions or max(
         spark.sparkContext.defaultParallelism * 2, 8
     )
@@ -206,10 +219,11 @@ def add_documents(
         .repartition(n_extract)
         .mapInArrow(make_extract_fn(config), schema=term_doc_schema(config))
     )
-    staging, commit = staged_write(paths.gen_dir(paths.term_doc, gen))
+    spill = paths.gen_dir(paths.term_doc, gen)
+    staging, commit = staged_write(spill)
     extracted.write.mode("overwrite").partitionBy("bucket").parquet(staging)
     commit()
-    td_gen = spark.read.parquet(paths.gen_dir(paths.term_doc, gen))
+    td_gen = spark.read.parquet(spill)
 
     # doc_stats append for the new docs
     dl_df = doc_lengths(td_gen)
@@ -239,6 +253,9 @@ def add_documents(
     staging, commit = staged_write(paths.gen_dir(paths.postings, gen))
     seg.write.mode("overwrite").partitionBy("bucket").parquet(staging)
     commit()
+    shutil.rmtree(spill)
+    if not os.listdir(paths.term_doc):
+        os.rmdir(paths.term_doc)
 
     meta["generations"][str(gen)] = {"avgdl": float(avgdl), "n_docs": int(n_new)}
     meta.update(
@@ -399,99 +416,72 @@ def delete_by_filter(
 def compact(spark: SparkSession, index_dir: str) -> dict:
     """Segment merge: fold all generations + tombstones into a fresh gen=0.
 
-    Reuses the term_doc extraction spill (no re-tokenization); docids are
-    preserved. After compaction df/idf are exact again and WAND bound
-    scaling returns to 1.
+    Merges the postings themselves (no re-tokenization): every
+    generation's rows are decoded, dead postings dropped (``_live_runs``),
+    and the live postings re-encoded by the build's own dictionary and
+    encoder kernels at the new avgdl; docids are preserved. After
+    compaction df/idf are exact again and WAND bound scaling returns to 1.
+
+    Stage-then-swap: docs, doc_stats, terms and postings are all staged
+    beside the live stores before any of them is replaced, so a compact
+    that fails while staging leaves the index serving as before. The swap
+    is then a sequence of renames, with meta.json written last.
     """
-    import shutil
-
     paths, meta, config = _load(spark, index_dir)
+    # staged by a compact that failed; a store whose live copy is gone
+    # (a crash inside the swap) keeps its only copy
+    for name in os.listdir(paths.root):
+        live = os.path.join(paths.root, name.split(".compact")[0])
+        if ".compact" in name and os.path.exists(live):
+            shutil.rmtree(os.path.join(paths.root, name))
     tomb = _tombstones_df(spark, paths)
-
-    td_live = _read_with_gen(spark, paths.term_doc)  # keep gen for the filter
-    stats_all = _read_with_gen(spark, paths.doc_stats)
-    docs_all = _read_with_gen(spark, paths.docs)
-    if tomb is not None:
-        # term_doc rows are (term, shard) docid-array runs — tombstones are
-        # removed by slicing the parallel arrays (one segmented decode +
-        # mask + re-encode per Arrow batch), not a join. A row's generation
-        # decides which tombstones apply (dead iff horizon > gen).
-        # Tombstone sets are explicit user deletes, bounded and
-        # driver-collectable; docs at true scale live in the arrays.
-        pairs = tomb.collect()
-        td_live = _filter_deleted_from_arrays(td_live, pairs, config)
-        stats_all = _filter_dead(stats_all, tomb)
-        docs_all = _filter_dead(docs_all, tomb)
-    td_live = td_live.drop("gen")
-    # compacted rows all live in the fresh gen 0
-    stats_all = stats_all.withColumn("gen", F.lit(0).cast("int"))
-    docs_all = docs_all.withColumn("gen", F.lit(0).cast("int"))
-
-    # rewrite docs + doc_stats (live rows only); latest row per docid wins
-    # (append-mode docs/doc_stats never duplicate docids, but be defensive)
-    from pyspark.sql import Observation
-
+    pairs = tomb.collect() if tomb is not None else []
     t0 = time.time()
-    staging, commit = staged_write(paths.docs + ".compact")
-    docs_all.write.mode("overwrite").parquet(staging)
-    commit()
+
+    def stage(store: str, df: DataFrame, *partition_by: str):
+        """Write ``df`` to ``<store>.compact`` (into its ``gen=0`` for the
+        segment stores), leaving the live store untouched."""
+        target = store + ".compact"
+        if store in (paths.terms, paths.postings):
+            target = paths.gen_dir(target, 0)
+        staging, commit = staged_write(target)
+        df.write.mode("overwrite").partitionBy(*partition_by).parquet(staging)
+        commit()
+
+    # compacted rows all live in the fresh gen 0
+    docs = _filter_dead(_read_with_gen(spark, paths.docs), tomb)
+    stage(paths.docs, docs.withColumn("gen", F.lit(0).cast("int")))
     obs = Observation()
-    stats_all = stats_all.observe(
+    stats = _filter_dead(_read_with_gen(spark, paths.doc_stats), tomb).observe(
         obs, F.count(F.lit(1)).alias("rows"), F.sum("dl").alias("dl"),
         F.max("docid").alias("max_docid"),
     )
-    staging, commit = staged_write(paths.doc_stats + ".compact")
-    stats_all.write.mode("overwrite").parquet(staging)
-    commit()
+    stage(paths.doc_stats, stats.withColumn("gen", F.lit(0).cast("int")))
     got = obs.get
     n_live = int(got["rows"])
     total_dl = int(got["dl"] or 0)
     max_docid = int(got["max_docid"] if got["max_docid"] is not None else -1)
-    staging, commit = staged_write(paths.term_doc + ".compact")
-    td_live.write.mode("overwrite").partitionBy("bucket").parquet(staging)
-    commit()
-    for p in (paths.docs, paths.doc_stats, paths.term_doc):
-        shutil.rmtree(p)
-    import os
-
-    os.replace(paths.docs + ".compact", paths.docs)
-    os.replace(paths.doc_stats + ".compact", paths.doc_stats)
-    os.makedirs(paths.term_doc + ".tmpwrap", exist_ok=True)
-    os.replace(paths.term_doc + ".compact", os.path.join(paths.term_doc + ".tmpwrap", "gen=0"))
-    os.replace(paths.term_doc + ".tmpwrap", paths.term_doc)
-
     avgdl = total_dl / n_live if n_live else 0.0
-    td = spark.read.parquet(paths.term_doc)
 
-    # dictionary
+    # the live postings of every generation, as extraction runs, written
+    # once: the dictionary and the encoder both read them
+    spill = paths.term_doc + ".compact"
+    _live_runs(_read_with_gen(spark, paths.postings), pairs, config) \
+        .write.mode("overwrite").parquet(spill)
+    runs = spark.read.parquet(spill)
     tobs = Observation()
-    terms = terms_agg(td).observe(tobs, F.count(F.lit(1)).alias("rows"))
-    staging, commit = staged_write(paths.terms + ".compact")
-    terms.write.mode("overwrite").parquet(staging)
-    commit()
+    stage(paths.terms, terms_agg(runs).observe(
+        tobs, F.count(F.lit(1)).alias("rows")))
     n_terms = int(tobs.get["rows"])
-    shutil.rmtree(paths.terms)
-    os.makedirs(paths.terms + ".tmpwrap", exist_ok=True)
-    os.replace(paths.terms + ".compact", os.path.join(paths.terms + ".tmpwrap", "gen=0"))
-    os.replace(paths.terms + ".tmpwrap", paths.terms)
+    seg = runs.groupBy("shard").applyInArrow(
+        make_encode_fn(config, avgdl), schema=POSTINGS_SCHEMA)
+    stage(paths.postings, seg, "bucket")
 
-    # postings: one merged generation
-    encode_fn = make_encode_fn(config, avgdl)
-    seg = (
-        td.drop("gen")
-        .filter(F.col("bucket") != DL_BUCKET)
-        .groupBy("shard")
-        .applyInArrow(encode_fn, schema=POSTINGS_SCHEMA)
-    )
-    staging, commit = staged_write(paths.postings + ".compact")
-    seg.write.mode("overwrite").partitionBy("bucket").parquet(staging)
-    commit()
-    shutil.rmtree(paths.postings)
-    os.makedirs(paths.postings + ".tmpwrap", exist_ok=True)
-    os.replace(paths.postings + ".compact", os.path.join(paths.postings + ".tmpwrap", "gen=0"))
-    os.replace(paths.postings + ".tmpwrap", paths.postings)
-
-    shutil.rmtree(paths.deletes, ignore_errors=True)
+    for store in (paths.docs, paths.doc_stats, paths.terms, paths.postings):
+        shutil.rmtree(store)
+        os.replace(store + ".compact", store)
+    for gone in (paths.deletes, spill, paths.term_doc):
+        shutil.rmtree(gone, ignore_errors=True)
 
     meta.update(
         n_docs=n_live,
@@ -511,129 +501,90 @@ def compact(spark: SparkSession, index_dir: str) -> dict:
 # ---------------------------------------------------------------------------
 
 
-def _filter_deleted_from_arrays(
-    td: DataFrame, tomb_rows: list, config: IndexConfig
+def _live_runs(
+    postings_df: DataFrame, tomb_pairs: list, config: IndexConfig
 ) -> DataFrame:
-    """Remove tombstoned docids from term_doc array rows — fully vectorized
-    (the same segmented-run codec toolkit the extract kernel uses: ONE
-    varint decode / segmented prefix sum / mask / re-encode pass per Arrow
-    batch and stream; no per-row or per-posting Python loops).
+    """Postings rows -> their live postings as extraction runs (rows in
+    ``term_doc_schema(config)``), the input ``terms_agg`` and
+    ``make_encode_fn`` take — fully vectorized: one varint decode per
+    stream per Arrow batch, no per-row or per-posting Python loops.
 
-    ``tomb_rows`` are (docid, horizon) pairs; a posting from a row of
-    generation g is dead iff its docid's horizon > g (generation-horizon
-    semantics — an in-place docid_col replacement kills only the older
-    generations). The pairs ship as a Spark broadcast — one torrent
-    transfer per executor — rather than inside every task's pickled
-    closure (same contract as the query-time scorer's broadcast)."""
-    import numpy as np
-    import pandas as pd
+    ``postings_df`` carries the ``gen`` and ``bucket`` partition columns.
+    ``tomb_pairs`` are (docid, horizon) rows; a posting of generation g is
+    dead iff its docid's horizon > g. Rows left with no live posting are
+    dropped. The pairs ship as a Spark broadcast — one torrent transfer
+    per executor — rather than inside every task's pickled closure."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
 
-    t_ids = np.asarray([int(r["docid"]) for r in tomb_rows], dtype=np.int64)
-    t_hor = np.asarray([int(r["horizon"]) for r in tomb_rows], dtype=np.int64)
-    order = np.argsort(t_ids, kind="stable")
-    bc = td.sparkSession.sparkContext.broadcast((t_ids[order], t_hor[order]))
-    store_positions = config.store_positions
-    schema = td.schema
-
-    from search_engine_spark.codecs import (
-        delta_decode_runs,
-        delta_encode_runs,
-        varint_decode,
-        varint_encode_runs,
-    )
     from search_engine_spark.query import _live_post_mask
 
-    def _slices(buf: bytes, boffs: np.ndarray) -> list:
-        mv = memoryview(buf)
-        return [bytes(mv[boffs[i]:boffs[i + 1]]) for i in range(len(boffs) - 1)]
-
-    def _filter_group(pdf: "pd.DataFrame", is_dl: bool, pt: tuple) -> "pd.DataFrame":
-        """Filter one homogeneous row group (term rows or DL rows)."""
-        n = pdf["n"].to_numpy().astype(np.int64)
-        nz = n > 0
-        starts = np.zeros(len(n), dtype=np.int64)
-        np.cumsum(n[:-1], out=starts[1:])
-        total = int(n.sum())
-        if total == 0:
-            return pdf.iloc[0:0]
-        docs_buf = b"".join(pdf["docs"])
-        docids = delta_decode_runs(
-            varint_decode(docs_buf, total, dtype=np.int64), starts[nz]
-        )
-        gen_per_val = np.repeat(pdf["gen"].to_numpy().astype(np.int64), n)
-        keep = _live_post_mask(docids, gen_per_val, pt)
-        new_n = np.zeros(len(n), dtype=np.int64)
-        new_n[nz] = np.add.reduceat(keep, starts[nz]) if keep.size else 0
-        # guard reduceat duplication for empty rows (n==0 never occurs in
-        # practice; nz-indexing keeps it correct anyway)
-        row_keep = new_n > 0
-        new_starts = np.zeros(int(row_keep.sum()), dtype=np.int64)
-        np.cumsum(new_n[row_keep][:-1], out=new_starts[1:])
-        offs = np.concatenate((new_starts, [int(new_n.sum())]))
-
-        d_kept = docids[keep]
-        docs_b, docs_off = varint_encode_runs(
-            delta_encode_runs(d_kept, new_starts).astype(np.uint64), offs
-        )
-        t_all = varint_decode(b"".join(pdf["tfs"]), total, dtype=np.int64)
-        tfs_b, tfs_off = varint_encode_runs(
-            t_all[keep].astype(np.uint64), offs
-        )
-        out = pdf.loc[row_keep.tolist()].reset_index(drop=True)
-        out["n"] = pd.Series(new_n[row_keep], dtype="int32")
-        out["docs"] = pd.Series(_slices(docs_b, docs_off), dtype="object")
-        out["tfs"] = pd.Series(_slices(tfs_b, tfs_off), dtype="object")
-        if is_dl:
-            out["cf"] = pd.Series(np.zeros(len(out)), dtype="int64")
-            out["max_tf"] = pd.Series(np.zeros(len(out)), dtype="int32")
-            out["dls"] = pd.Series([b""] * len(out), dtype="object")
-            if "poss" in out.columns:
-                out["poss"] = pd.Series([b""] * len(out), dtype="object")
-            return out
-        dl_all = varint_decode(b"".join(pdf["dls"]), total, dtype=np.int64)
-        dls_b, dls_off = varint_encode_runs(
-            dl_all[keep].astype(np.uint64), offs
-        )
-        out["dls"] = pd.Series(_slices(dls_b, dls_off), dtype="object")
-        t_surv = np.where(keep, t_all, 0)
-        cf = np.zeros(len(n), dtype=np.int64)
-        mx = np.zeros(len(n), dtype=np.int64)
-        cf[nz] = np.add.reduceat(t_surv, starts[nz])
-        mx[nz] = np.maximum.reduceat(t_surv, starts[nz])
-        out["cf"] = pd.Series(cf[row_keep], dtype="int64")
-        out["max_tf"] = pd.Series(mx[row_keep], dtype="int32")
-        if store_positions and "poss" in pdf.columns:
-            # per-posting delta runs decode independently (first position
-            # absolute), so surviving postings' raw deltas re-concatenate
-            # without re-encoding: mask per TOKEN, one varint pass
-            tok_total = int(t_all.sum())
-            p_all = varint_decode(b"".join(pdf["poss"]), tok_total)
-            tok_keep = np.repeat(keep, t_all)
-            tok_counts = np.zeros(len(n), dtype=np.int64)
-            tok_counts[nz] = np.add.reduceat(t_surv, starts[nz])
-            tk = tok_counts[row_keep]
-            p_offs = np.zeros(len(tk) + 1, dtype=np.int64)
-            np.cumsum(tk, out=p_offs[1:])
-            poss_b, poss_off = varint_encode_runs(p_all[tok_keep], p_offs)
-            out["poss"] = pd.Series(_slices(poss_b, poss_off), dtype="object")
-        return out
+    t_ids = np.asarray([int(r["docid"]) for r in tomb_pairs], dtype=np.int64)
+    t_hor = np.asarray([int(r["horizon"]) for r in tomb_pairs], dtype=np.int64)
+    order = np.argsort(t_ids, kind="stable")
+    bc = postings_df.sparkSession.sparkContext.broadcast(
+        (t_ids[order], t_hor[order]))
+    block_size, store_positions = config.block_size, config.store_positions
+    out_schema = _extract_arrow_schema(store_positions)
 
     def fn(batches):
         pt = bc.value
-        for pdf in batches:
-            if len(pdf) == 0 or len(pt[0]) == 0:
-                yield pdf
+        for batch in batches:
+            if not batch.num_rows:
                 continue
-            is_dl = pdf["bucket"].to_numpy() == DL_BUCKET
-            parts = []
-            if (~is_dl).any():
-                parts.append(_filter_group(pdf.loc[(~is_dl).tolist()].reset_index(drop=True), False, pt))
-            if is_dl.any():
-                parts.append(_filter_group(pdf.loc[is_dl.tolist()].reset_index(drop=True), True, pt))
-            out = pd.concat(parts, ignore_index=True) if parts else pdf.iloc[0:0]
-            yield out[list(pdf.columns)]
+            n = batch.column("n_docs").to_numpy(
+                zero_copy_only=False).astype(np.int64)
+            starts = np.zeros(len(n), dtype=np.int64)
+            np.cumsum(n[:-1], out=starts[1:])
+            total = int(n.sum())
+            # a block's first docid delta is stored as 0: put the block's
+            # absolute first docid there, then decode runs = blocks
+            in_row = np.arange(total, dtype=np.int64) - np.repeat(starts, n)
+            block_start = np.flatnonzero(in_row % block_size == 0)
+            deltas = varint_decode(
+                _blob_flat(batch, "docs"), total, dtype=np.int64)
+            deltas[block_start] = pc.struct_field(pc.list_flatten(
+                batch.column("block_meta")), "first_docid").to_numpy()
+            docids = delta_decode_runs(deltas, block_start)
+            tfs = varint_decode(_blob_flat(batch, "tfs"), total, dtype=np.int64)
+            dls = varint_decode(_blob_flat(batch, "dls"), total, dtype=np.int64)
+            gen = batch.column("gen").to_numpy(
+                zero_copy_only=False).astype(np.int64)
+            keep = _live_post_mask(docids, np.repeat(gen, n), pt)
 
-    return td.mapInPandas(fn, schema)
+            live_n = np.add.reduceat(keep, starts)
+            rows = np.flatnonzero(live_n)
+            offs = np.zeros(len(rows) + 1, dtype=np.int64)
+            np.cumsum(live_n[rows], out=offs[1:])
+            d, t = docids[keep], tfs[keep]
+            cf = np.add.reduceat(t, offs[:-1])
+            cols = [
+                pc.take(batch.column(c), pa.array(rows))
+                for c in ("bucket", "term", "shard")
+            ] + [
+                pa.array(live_n[rows], type=pa.int32()),
+                pa.array(cf, type=pa.int64()),
+                pa.array(np.maximum.reduceat(t, offs[:-1]), type=pa.int32()),
+                _binary_runs(*varint_encode_runs(
+                    delta_encode_runs(d, offs[:-1]), offs)),
+                _binary_runs(*varint_encode_runs(t, offs)),
+                _binary_runs(*varint_encode_runs(dls[keep], offs)),
+            ]
+            if store_positions:
+                # per-posting position deltas (first position absolute)
+                # decode independently: keep the live postings' deltas
+                p = varint_decode(_blob_flat(batch, "poss"), int(tfs.sum()),
+                                  dtype=np.uint32)
+                p_offs = np.zeros(len(rows) + 1, dtype=np.int64)
+                np.cumsum(cf, out=p_offs[1:])
+                cols.append(_binary_runs(
+                    *varint_encode_runs(p[np.repeat(keep, tfs)], p_offs)))
+            yield pa.RecordBatch.from_arrays(cols, schema=out_schema)
+
+    return postings_df.select(
+        "bucket", "term", "shard", "gen", "n_docs", "docs", "tfs", "dls",
+        "poss", "block_meta",
+    ).mapInArrow(fn, schema=term_doc_schema(config))
 
 
 def _append_tombstones(
@@ -654,8 +605,6 @@ def _tombstones_df(spark: SparkSession, paths: IndexPaths) -> DataFrame | None:
     """(docid, horizon) with horizon folded to the max per docid (a doc is
     dead in gen g iff ANY tombstone has horizon > g iff max(horizon) > g).
     Rows written before horizons existed read as dead-everywhere."""
-    import os
-
     if not os.path.isdir(paths.deletes):
         return None
     d = spark.read.parquet(paths.deletes)
@@ -778,8 +727,6 @@ def reindex(
     in-place reindex gives. Persisted query-time settings carry over
     (``settings`` overrides them when given).
     """
-    import os
-    import shutil
     import tempfile
 
     from search_engine_spark.build import build_index
@@ -822,7 +769,7 @@ def snapshot(index_dir: str, dest_dir: str, include_metrics: bool = True) -> dic
     (pinning the committed generation set), the data trees are copied,
     then any ``gen=N`` segment directory NOT in the pinned set is pruned
     and the PINNED meta is written last, so a generation landed mid-copy
-    does not reach the segment stores (term_doc / terms / postings). The
+    does not reach the segment stores (terms / postings). The
     flat stores (docs / doc_stats / deletes) are copied as they are:
     readers do not bound them by the pinned generations, so rows or
     tombstones a concurrent writer adds mid-copy can reach the snapshot.
@@ -835,8 +782,6 @@ def snapshot(index_dir: str, dest_dir: str, include_metrics: bool = True) -> dic
     matters, not the copy mechanism.
     """
     import json
-    import os
-    import shutil
 
     src = IndexPaths(index_dir)
     meta = read_meta(src)
@@ -845,12 +790,12 @@ def snapshot(index_dir: str, dest_dir: str, include_metrics: bool = True) -> dic
         raise ValueError(f"snapshot: {dest_dir!r} already holds an index")
     os.makedirs(dest_dir, exist_ok=True)
     dst = IndexPaths(dest_dir)
-    for name in ("docs", "doc_stats", "term_doc", "terms", "postings",
+    for name in ("docs", "doc_stats", "terms", "postings",
                  "deletes") + (("metrics",) if include_metrics else ()):
         s = getattr(src, name)
         if os.path.exists(s):
             shutil.copytree(s, getattr(dst, name), dirs_exist_ok=True)
-    for name in ("term_doc", "terms", "postings"):
+    for name in ("terms", "postings"):
         base = getattr(dst, name)
         if not os.path.isdir(base):
             continue

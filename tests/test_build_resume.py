@@ -3,10 +3,11 @@ after one postings bucket) resumes, with the same arguments, to the same
 postings, terms and doc_stats as an uninterrupted build."""
 
 import hashlib
+import os
 
 import pytest
 
-from search_engine_spark.index import STAGES
+from search_engine_spark.index import STAGES, IndexPaths
 
 _CFG = dict(num_shards=2, num_buckets=4, block_size=32, attr_cols=("lang",))
 
@@ -53,6 +54,7 @@ def test_killed_build_resumes_to_clean_build(spark, pages_pdf, tmp_path,
     with pytest.raises(BuildError, match="injected failure"):
         _build(spark, pages_pdf, d, fail_after=stage)
     _build(spark, pages_pdf, d, fail_after=None)
+    assert not os.path.exists(IndexPaths(d).term_doc)
     got = _digests(d)
     assert all(got.values())
     assert got == clean_digests

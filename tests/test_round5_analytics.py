@@ -465,9 +465,12 @@ def test_pq_rerank_pool_full_equals_brute_force(spark):
 
 
 def test_snapshot_point_in_time_copy(spark, tmp_path):
+    import os
+
     from search_engine_spark.build import build_index
     from search_engine_spark.config import IndexConfig
     from search_engine_spark.corpus import generate_pages
+    from search_engine_spark.index import IndexPaths
     from search_engine_spark.query import SearchIndex
     from search_engine_spark.update import add_documents, snapshot
 
@@ -482,6 +485,7 @@ def test_snapshot_point_in_time_copy(spark, tmp_path):
     snap = str(tmp_path / "snap_idx")
     meta = snapshot(src, snap)
     assert set(meta["generations"]) == {"0", "1"}
+    assert not os.path.exists(IndexPaths(snap).term_doc)
 
     before = [(r["pk"], round(r["score"], 6)) for r in
               SearchIndex(spark, src).search("table join", k=10).collect()]

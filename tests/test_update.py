@@ -129,16 +129,24 @@ def test_overlapping_deletes_count_distinct_docids(spark, small_index):
 
 
 def test_compact_equals_clean_rebuild(spark, small_index, tmp_path):
+    import os
+
     from search_engine_spark.build import build_index
     from search_engine_spark.config import IndexConfig
+    from search_engine_spark.index import IndexPaths
     from search_engine_spark.query import SearchIndex
     from search_engine_spark.update import add_documents, compact
 
+    # no writer leaves the term_doc extraction spill behind
+    spill = IndexPaths(small_index).term_doc
+    assert not os.path.exists(spill)
     add_documents(spark, small_index, spark.createDataFrame(
         pd.DataFrame([("b", "fresh replacement text", "en"),
                       ("f", "spark streaming watermark", "en")],
                      columns=["url", "text", "lang"])))
+    assert not os.path.exists(spill)
     meta = compact(spark, small_index)
+    assert not os.path.exists(spill)
     assert meta["n_deleted"] == 0
     assert set(meta["generations"]) == {"0"}
     ix = SearchIndex(spark, small_index)
@@ -398,7 +406,10 @@ def test_docid_col_replacement_in_place(spark, docid_index):
 
 def test_docid_col_replace_twice_then_compact(spark, docid_index, tmp_path):
     """Two in-place replacements stack horizons correctly; compact folds to
-    a clean single-generation index equal to a fresh rebuild."""
+    a clean single-generation index equal to a fresh rebuild, down to the
+    rows of its postings and dictionary."""
+    from test_build_resume import _digests
+
     from search_engine_spark.build import build_index
     from search_engine_spark.config import IndexConfig
     from search_engine_spark.query import SearchIndex
@@ -436,6 +447,9 @@ def test_docid_col_replace_twice_then_compact(spark, docid_index, tmp_path):
     cx = SearchIndex(spark, clean)
     for q in ("spark query", "second final", "planner"):
         assert _pk_results(ix2, q) == _pk_results(cx, q), q
+    got, want = _digests(docid_index), _digests(clean)
+    for name in ("postings", "terms"):
+        assert got[name] == want[name], name
     shutil.rmtree(clean, ignore_errors=True)
 
 
@@ -512,9 +526,10 @@ def test_phrase_docids_skips_tombstoned_docs(spark, small_index, docid_index):
 
 
 def test_parent_format_index_stays_usable(spark, small_index):
-    """Indexes written before the dictionary lost its term_id column and
-    IndexConfig lost its path selectors keep opening, serving, appending
-    and compacting; the retired names are not settable."""
+    """Indexes written before the dictionary lost its term_id column,
+    IndexConfig lost its path selectors and finished indexes lost their
+    term_doc spill keep opening, serving, appending and compacting; the
+    retired names are not settable, and compact removes the stale spill."""
     import json
     import os
 
@@ -552,6 +567,9 @@ def test_parent_format_index_stays_usable(spark, small_index):
     shutil.rmtree(gen0)
     os.makedirs(gen0)
     pq.write_table(t, os.path.join(gen0, "part-00000.parquet"))
+    spill0 = paths.gen_dir(paths.term_doc, 0)
+    os.makedirs(spill0)
+    pq.write_table(t, os.path.join(spill0, "part-00000.parquet"))
 
     ix = SearchIndex(spark, small_index)
     assert rows(ix) == before
@@ -561,6 +579,7 @@ def test_parent_format_index_stays_usable(spark, small_index):
                      columns=["url", "text", "lang"])))
     gen1 = ds.dataset(paths.gen_dir(paths.terms, 1), format="parquet")
     assert "term_id" not in gen1.schema.names
+    assert os.listdir(paths.term_doc) == ["gen=0"]  # the append's spill is gone
     ix = SearchIndex(spark, small_index)
     assert [p for p, _ in _pk_results(ix, "banana")] == ["e"]
     vocab = {w for _, text, _ in _SMALL_ROWS for w in text.split()}
@@ -570,6 +589,7 @@ def test_parent_format_index_stays_usable(spark, small_index):
 
     meta = compact(spark, small_index)
     assert meta["n_terms"] == n_terms
+    assert not os.path.exists(paths.term_doc)
     assert not RETIRED_CONFIG_FIELDS & set(meta["config"])
     assert [p for p, _ in _pk_results(SearchIndex(spark, small_index), "banana")] == ["e"]
     with pytest.raises(ValueError, match="unknown settings"):
@@ -778,6 +798,82 @@ def test_score_details_on_mutated_index(spark, churned_index):
         assert top and set(sums) == set(top), kw
         for d, s in top.items():
             assert math.isclose(sums[d], s, rel_tol=1e-9), (kw, d, s, sums[d])
+
+
+def _served(spark, index_dir):
+    """n_docs and (docid, pk, 9-decimal score) rows of plain and
+    lang-filtered queries on the driver route and the cluster route."""
+    from search_engine_spark.query import SearchIndex
+
+    ix = SearchIndex(spark, index_dir)
+    out = {"n_docs": ix.n_docs}
+    for q in ("banana recipe", "spark query", "window stream planner"):
+        for f in (None, {"lang": "fr"}):
+            out[q, "driver", str(f)] = [
+                (r["docid"], r["pk"], round(r["score"], 9))
+                for r in ix.search_rows(q, k=50, filter_ast=f)]
+            out[q, "cluster", str(f)] = [
+                (r["docid"], r["pk"], round(r["score"], 9))
+                for r in ix.search(q, k=50, filter_ast=f,
+                                   execution="cluster").collect()]
+    return out
+
+
+@pytest.mark.parametrize("store", ["docs", "doc_stats", "terms", "postings"])
+def test_failed_compact_keeps_serving(spark, churned_index, monkeypatch,
+                                      store):
+    """compact stages every store before it replaces any: a compact that
+    fails while staging one leaves the index serving what it served
+    before, on both routes, and the next compact clears its leftovers."""
+    import os
+
+    from search_engine_spark import update
+
+    before = _served(spark, churned_index)
+    real = update.staged_write
+
+    def failing(target):
+        rel = os.path.relpath(target, churned_index)
+        if rel.split(os.sep)[0].split(".")[0] == store:
+            raise OSError(f"injected staging failure under {store}")
+        return real(target)
+
+    monkeypatch.setattr(update, "staged_write", failing)
+    with pytest.raises(OSError, match="injected"):
+        update.compact(spark, churned_index)
+    assert _served(spark, churned_index) == before
+    monkeypatch.undo()
+    update.compact(spark, churned_index)
+    assert not [n for n in os.listdir(churned_index) if ".compact" in n]
+
+
+def test_compacted_rows_equal_clean_build(spark, churned_index, tmp_path):
+    """compact merges the postings of three generations under full and
+    generation-horizon tombstones into exactly the postings and dictionary
+    rows a clean build of the live documents writes."""
+    from test_build_resume import _digests
+
+    from search_engine_spark.build import build_index
+    from search_engine_spark.config import IndexConfig
+    from search_engine_spark.index import IndexPaths
+    from search_engine_spark.update import (
+        _filter_dead,
+        _read_with_gen,
+        _tombstones_df,
+        compact,
+    )
+
+    paths = IndexPaths(churned_index)
+    live = _filter_dead(_read_with_gen(spark, paths.docs),
+                        _tombstones_df(spark, paths)).drop("gen").toPandas()
+    compact(spark, churned_index)
+    clean = str(tmp_path / "clean")
+    build_index(spark, spark.createDataFrame(live), clean, IndexConfig(
+        text_col="text", pk_col="pk", ts_col=None, docid_col="docid",
+        attr_cols=("lang", "stars"), num_shards=2, num_buckets=2))
+    got, want = _digests(churned_index), _digests(clean)
+    for name in ("postings", "terms"):
+        assert got[name] == want[name], name
 
 
 def _batch_vs_rows(spark, ix, queries, group, **kw):

@@ -51,6 +51,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 from search_engine_spark.codecs import PostingReader, bm25_impact
 from search_engine_spark.config import IndexConfig, IndexSettings
@@ -88,17 +89,21 @@ def _quote_ident(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
 
 
-def _local_df(spark: SparkSession, rows: list[tuple], ddl: str) -> DataFrame:
-    """A driver-side result DataFrame of ``rows`` with the DDL schema
-    ``ddl``, handed to Spark as one Arrow table. A list of tuples would be
-    parallelized to Python workers, so its first action pays a Spark job
-    (~280 ms, even for no rows); the Arrow table needs no worker and does
-    not depend on the Arrow conf."""
+def _local_df(
+    spark: SparkSession, rows: list[tuple], schema: "str | StructType"
+) -> DataFrame:
+    """A driver-side result DataFrame of ``rows`` with ``schema`` (a DDL
+    string or a ``StructType``), handed to Spark as one Arrow table. A list
+    of tuples would be parallelized to Python workers, so its first action
+    pays a Spark job (~280 ms, even for no rows); the Arrow table needs no
+    worker, does not depend on the Arrow conf and plans as a
+    ``LocalTableScan``."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
-    from pyspark.sql.types import StructType
 
-    schema = to_arrow_schema(StructType.fromDDL(ddl))
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    schema = to_arrow_schema(schema)
     cols = list(zip(*rows)) or [()] * len(schema)
     return spark.createDataFrame(pa.table(
         [pa.array(c, type=f.type) for c, f in zip(cols, schema)], schema=schema))
@@ -536,14 +541,11 @@ class SearchIndex:
             if uncached:
                 terms = sorted({h for c in uncached for h in (c[2], c[3])})
                 readers = self._readers_for(terms)
-                deleted = self._deleted if len(self._deleted) else None
                 occ_cache: dict[str, np.ndarray] = {}
                 for _min_df, _half_dfs, left, right in uncached:
-                    docs = _phrase_docids(readers, [left, right],
-                                          self._partial_tombs, occ_cache)
-                    if deleted is not None and len(docs):
-                        docs = docs[~np.isin(docs, deleted)]
-                    self._split_rank_cache[(left, right)] = len(docs)
+                    self._split_rank_cache[(left, right)] = len(_phrase_live(
+                        readers, self._deleted, self._partial_tombs,
+                        [left, right], occ_cache))
             ranked = sorted(
                 ((self._split_rank_cache[(c[2], c[3])], c[0], c[2], c[3])
                  for c in cands),
@@ -564,36 +566,38 @@ class SearchIndex:
         )
         return {r["term"]: r["df"] for r in rows}
 
-    def _expand_typo(self, word: str) -> dict[str, int]:
+    def _typo_scan(self, word: str) -> tuple[int, dict[str, int]]:
+        """The dictionary scan of ``_expand_typo`` and ``suggest``:
+        ``word``'s typo budget under the index settings, and term -> df of
+        the terms that can lie within it. A budget of 0 is an exact lookup.
+        Otherwise the local dictionary, when held, is filtered on the length
+        window; without it one Spark filter also bounds the Levenshtein
+        distance. The callers apply the distance bound."""
         s = self.settings
-        budget = (
-            max_typos_for(word, s.typo_one_min_len, s.typo_two_min_len)
-            if s.typos_enabled
-            else 0
-        )
+        budget = (max_typos_for(word, s.typo_one_min_len, s.typo_two_min_len)
+                  if s.typos_enabled else 0)
         if budget == 0:
-            return self._lookup_exact([word])
+            return 0, self._lookup_exact([word])
         d = self._local_dict()
         if d is not None:
-            stats = {
-                t: df
-                for t, df in d.items()
-                if abs(len(t) - len(word)) <= budget
-            }
-        else:
-            cand = (
-                self._terms.filter(
-                    (F.length("term") >= len(word) - budget)
-                    & (F.length("term") <= len(word) + budget)
-                    & (F.levenshtein(F.col("term"), F.lit(word)) <= budget)
-                )
-                .select("term", "df")
-                .collect()
+            return budget, {t: df for t, df in d.items()
+                            if abs(len(t) - len(word)) <= budget}
+        rows = (
+            self._terms.filter(
+                (F.length("term") >= len(word) - budget)
+                & (F.length("term") <= len(word) + budget)
+                & (F.levenshtein(F.col("term"), F.lit(word)) <= budget)
             )
-            stats = {r["term"]: r["df"] for r in cand}
+            .select("term", "df")
+            .collect()
+        )
+        return budget, {r["term"]: r["df"] for r in rows}
+
+    def _expand_typo(self, word: str) -> dict[str, int]:
+        budget, stats = self._typo_scan(word)
         chosen = typo_candidates(
             word, stats.keys(), budget=budget,
-            max_expansions=s.typo_max_expansions,
+            max_expansions=self.settings.typo_max_expansions,
         )
         return {t: stats[t] for t in chosen}
 
@@ -855,11 +859,8 @@ class SearchIndex:
             return 0
         if sum(dfs.values()) > self.driver_exec_max_postings:
             return None
-        readers = self._readers_for(sorted(dfs))
-        docs = _phrase_docids(readers, list(words), self._partial_tombs)
-        if len(self._deleted) and len(docs):
-            docs = docs[~np.isin(docs, self._deleted)]
-        n = int(len(docs))
+        n = len(_phrase_live(self._readers_for(sorted(dfs)), self._deleted,
+                             self._partial_tombs, list(words)))
         self._split_rank_cache[key] = n
         return n
 
@@ -871,6 +872,41 @@ class SearchIndex:
             src = self._pinned
         return src.filter(
             F.col("bucket").isin(buckets) & F.col("term").isin(terms)
+        )
+
+    def _docid_set(self, terms: list[str], kernel) -> DataFrame:
+        """The docid-set route of the per-result surfaces:
+        ``kernel(readers, deleted, partial_tombs)`` returns the sorted live
+        docids of ``terms``' postings, applying both kinds of tombstones.
+        Under ``search_many``'s budget rule (the terms' df sum fits
+        ``driver_exec_max_postings``) it runs once over driver point reads
+        and no Spark job runs; above it, once per shard in one
+        ``groupby('shard')`` job (shards hold disjoint docids).
+        -> DataFrame(docid long), sorted."""
+        terms = sorted(set(terms))
+        if sum(self._lookup_exact(terms).values()) <= self.driver_exec_max_postings:
+            docs = kernel(self._readers_for(terms),
+                          self._deleted if len(self._deleted) else None,
+                          self._partial_tombs)
+            return _local_df(self.spark, [(d,) for d in docs.tolist()],
+                             "docid long")
+        block_size, avgdl, gen_avgdl = (self.config.block_size, self.avgdl,
+                                        self.gen_avgdl)
+        dead_bc, part_bc = self._deleted_bc, self._partial_bc
+
+        def shard_docids(pdf: pd.DataFrame) -> pd.DataFrame:
+            docs = kernel(
+                _readers_from_rows(pdf.to_dict("records"), block_size, avgdl,
+                                   gen_avgdl),
+                dead_bc.value if dead_bc is not None else None,
+                part_bc.value if part_bc is not None else None,
+            )
+            return pd.DataFrame({"docid": pd.Series(docs, dtype="int64")})
+
+        return (
+            self._postings_for(terms).groupby("shard")
+            .applyInPandas(shard_docids, schema="docid long")
+            .orderBy("docid")
         )
 
     def search(
@@ -1036,31 +1072,12 @@ class SearchIndex:
         )
 
     def matching_docids(self, terms: list[str]) -> DataFrame:
-        """Disjunctive candidate set: docids containing >=1 of ``terms``
-        (reference R1 resolve_docids). Decoded per shard, tombstones out."""
-        pq_df = self._postings_for(sorted(set(terms)))
-        block_size = self.config.block_size
-        dead_bc, part_bc = self._deleted_bc, self._partial_bc
-
-        def decode(batches):
-            dead = dead_bc.value if dead_bc is not None else None
-            pt = part_bc.value if part_bc is not None else None
-            for pdf in batches:
-                chunks = []
-                for row in pdf.to_dict("records"):
-                    r = PostingReader.from_row(row, block_size)
-                    d, _, _ = _live_decode(r, pt)
-                    if dead is not None and len(d):
-                        d = d[~np.isin(d, dead)]
-                    chunks.append(d)
-                out = (
-                    np.unique(np.concatenate(chunks))
-                    if chunks
-                    else np.zeros(0, dtype=np.int64)
-                )
-                yield pd.DataFrame({"docid": pd.Series(out, dtype="int64")})
-
-        return pq_df.mapInPandas(decode, schema="docid long").distinct()
+        """Disjunctive candidate set (reference R1 resolve_docids): the live
+        docids holding >= 1 of ``terms``, the ``_live_union`` kernel on the
+        ``_docid_set`` route (driver point reads within
+        ``driver_exec_max_postings``, one task per shard above it).
+        -> DataFrame(docid long), sorted."""
+        return self._docid_set(terms, _live_union)
 
     def search_sorted(
         self,
@@ -1071,9 +1088,12 @@ class SearchIndex:
         filter_ast: dict | None = None,
     ) -> DataFrame:
         """Attribute-ordered retrieval (reference K7 SortRule,
-        ``ranking/sort.rs:35-150``): candidates (docs matching the query
-        disjunctively, or the whole universe) ordered by attribute columns
-        with (docid asc) tiebreak, paginated.
+        ``ranking/sort.rs:35-150``): candidates ordered by attribute columns
+        with (docid asc) tiebreak, paginated. With a ``query`` the
+        candidates are the docs its plan would score: the exhaustive
+        scorer's candidate set, so negation, phrases and ``match_all`` (or
+        the index's matching strategy) apply as they do in ``search``;
+        without one, the whole universe. ``filter_ast`` narrows either.
 
         -> DataFrame(rank, docid, pk, <sort columns...>). Missing-value rows
         sort last (reference: missing-values bucket last).
@@ -1089,7 +1109,15 @@ class SearchIndex:
                 return _local_df(self.spark, [], ", ".join(["rank int"] + [
                     f"{_quote_ident(c)} {base.schema[c].dataType.simpleString()}"
                     for c in cols]))
-            base = base.join(self.matching_docids(list(p.term_weights)), "docid")
+            avgdl, k1, b = self.avgdl, self.config.k1, self.config.b
+            exact_dl_check = not self.config.field_cols
+
+            def candidates(readers, deleted, pt) -> np.ndarray:
+                return _exhaustive_scores(readers, p, None, avgdl, k1, b,
+                                          deleted, pt, exact_dl_check)[0]
+
+            base = base.join(self._docid_set(_plan_terms(p), candidates),
+                             "docid")
         order = [
             (F.col(c).asc_nulls_last() if d.lower().startswith("asc")
              else F.col(c).desc_nulls_last())
@@ -1118,9 +1146,9 @@ class SearchIndex:
         stored attribute column (the field distribution).
 
         Scale shape: two full aggregations (doc spine + dictionary),
-        both map-side combined down to ONE row each, cross-joined
-        broadcast and unpivoted driver-free with ``stack``. Never
-        collects a table.
+        both map-side combined down to ONE row each, each unpivoted
+        driver-free with ``stack`` and the two unioned. Never collects a
+        table.
 
         -> (stat, value double), ordered by stat.
         """
@@ -1137,17 +1165,16 @@ class SearchIndex:
             F.sum("df").cast("double").alias("n_postings"),
             F.sum("cf").cast("double").alias("total_tokens"),
         )
-        row = core.crossJoin(F.broadcast(tstats))
-        names = ["n_docs", "avgdl", "n_terms", "n_postings", "total_tokens"] + [
-            f"field_{c}" for c in attr_cols
-        ]
-        # attribute names are user data: labels go in as literals and
-        # columns as quoted identifiers, so no name is parsed as SQL
-        pairs = [x for s in names for x in (F.lit(s), F.col(_quote_ident(s)))]
-        return (
-            row.select(F.stack(F.lit(len(names)), *pairs).alias("stat", "value"))
-            .orderBy("stat")
-        )
+
+        def unpivot(row: DataFrame) -> DataFrame:
+            # attribute names are user data: labels go in as literals and
+            # columns as quoted identifiers, so no name is parsed as SQL
+            pairs = [x for s in row.columns
+                     for x in (F.lit(s), F.col(_quote_ident(s)))]
+            return row.select(
+                F.stack(F.lit(len(row.columns)), *pairs).alias("stat", "value"))
+
+        return unpivot(core).unionByName(unpivot(tstats)).orderBy("stat")
 
     def suggest(self, query: str) -> DataFrame:
         """Did-you-mean query correction: for every plain word in the
@@ -1165,54 +1192,27 @@ class SearchIndex:
         Note the metric is plain Levenshtein (a transposition costs 2),
         matching the SQL oracle's ``levenshtein``.
 
-        Scale shape: the word list is broadcast, so ONE parallel scan of
-        the term dictionary evaluates every word's length-window +
-        distance predicate (no dictionary shuffle); the survivor set is
-        candidate-sized and the per-word top-1 window runs on that.
+        Each word's candidates come from ``_typo_scan``, the dictionary
+        scan ``_expand_typo`` uses: the local dictionary when it is held on
+        the driver (no Spark job), else one Spark filter per word.
 
         -> (term, suggestion, dist, df), ordered by term.
         """
-        from search_engine_spark.query_parse import max_typos_for, parse_query
-
-        s = self.settings
         pq = parse_query(query)
-        words = list(dict.fromkeys(
-            pq.words + pq.typos + pq.prefixes
-            + [w for ph in pq.phrases for w in ph]
-        ))
-        if not words:
-            return _local_df(self.spark, [],
-                             "term string, suggestion string, dist int, df long")
-        budgets = [
-            (
-                w,
-                max_typos_for(w, s.typo_one_min_len, s.typo_two_min_len)
-                if s.typos_enabled
-                else 0,
+        words = set(pq.words + pq.typos + pq.prefixes
+                    + [w for ph in pq.phrases for w in ph])
+        rows = []
+        for w in sorted(words):
+            budget, cands = self._typo_scan(w)
+            best = min(
+                ((dist, -df, t) for t, df in cands.items()
+                 if (dist := levenshtein(w, t, cap=budget + 1)) <= budget),
+                default=None,
             )
-            for w in words
-        ]
-        qdf = _local_df(self.spark, budgets, "term string, budget int")
-        dist = F.levenshtein("suggestion", "term")
-        cand = (
-            self._terms.select(F.col("term").alias("suggestion"), "df")
-            .crossJoin(F.broadcast(qdf))
-            .filter(
-                (F.abs(F.length("suggestion") - F.length("term"))
-                 <= F.col("budget"))
-                & (dist <= F.col("budget"))
-            )
-            .select("term", "suggestion", dist.cast("int").alias("dist"), "df")
-        )
-        w = Window.partitionBy("term").orderBy(
-            "dist", F.desc("df"), "suggestion"
-        )
-        return (
-            cand.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select("term", "suggestion", "dist", "df")
-            .orderBy("term")
-        )
+            if best is not None:
+                rows.append((w, best[2], best[0], -best[1]))
+        return _local_df(self.spark, rows,
+                         "term string, suggestion string, dist int, df long")
 
     def execute(
         self, plan: QueryPlan, mode: str = "auto", filter_ast: dict | None = None,
@@ -1311,9 +1311,9 @@ class SearchIndex:
                         tbl.column("pk").to_pylist()))
 
     def _docs_lookup(
-        self, docids: list[int], columns: list[str] | None = None
+        self, docids: list[int], columns: list[str]
     ) -> dict[int, dict]:
-        """Stored-document fields per docid via a pyarrow point read of the
+        """Stored ``columns`` per docid via a pyarrow point read of the
         docs snapshot (files are docid-range-partitioned at build, so
         row-group stats prune to the k docids' groups — no Spark job).
         Newest generation wins per docid, matching ``_docs_snapshot()``
@@ -1325,26 +1325,16 @@ class SearchIndex:
             return {}
         if self._docs_dataset is None:
             self._docs_dataset = ds.dataset(self.paths.docs, format="parquet")
-        names = set(self._docs_dataset.schema.names)
-        want = list(columns) if columns is not None else sorted(
-            names - {"docid", "gen"})
-        cols = ["docid"] + [c for c in want if c in names]
-        if "gen" in names:
-            cols.append("gen")
+        names = self._docs_dataset.schema.names
+        cols = ["docid", *[c for c in columns if c in names],
+                *[c for c in ("gen",) if c in names]]
         tbl = self._docs_dataset.to_table(
             columns=cols, filter=ds.field("docid").isin(list(docids)))
-        rows = tbl.to_pylist()
         out: dict[int, dict] = {}
-        for row in rows:
-            d, g = int(row["docid"]), int(row.get("gen") or 0)
-            prev = out.get(d)
-            if prev is None or g >= prev["__gen__"]:
-                row["__gen__"] = g
-                out[d] = row
-        for row in out.values():
-            row.pop("__gen__", None)
+        # stable sort by generation: a docid's newest version comes last
+        for row in sorted(tbl.to_pylist(), key=lambda r: r.get("gen") or 0):
             row.pop("gen", None)
-            row.pop("docid", None)
+            out[row.pop("docid")] = row
         return out
 
     def _readers_for(
@@ -1537,8 +1527,6 @@ class SearchIndex:
         for exactly those docids, and rebuild the decorated frame locally —
         zero corpus shuffle, sub-second warm. Larger inputs keep the
         distributed left join against the live snapshot."""
-        from pyspark.sql.types import StructField, StructType
-
         missing = [c for c in cols if c not in results.columns]
         if not missing:
             return results
@@ -1548,16 +1536,11 @@ class SearchIndex:
             return results.join(docs.select("docid", *missing), "docid", "left")
         fields = self._docs_snapshot_schema()
         lookup = self._docs_lookup([r["docid"] for r in rows], missing)
-        schema = StructType(
-            list(results.schema.fields)
-            + [StructField(c, fields[c].dataType, True) for c in missing]
-        )
-        data = [
-            tuple(r) + tuple(
-                (lookup.get(r["docid"]) or {}).get(c) for c in missing)
-            for r in rows
-        ]
-        return self.spark.createDataFrame(data, schema)
+        schema = StructType([*results.schema.fields, *[
+            StructField(c, fields[c].dataType, True) for c in missing]])
+        return _local_df(self.spark, [
+            tuple(r) + tuple(lookup.get(r["docid"], {}).get(c) for c in missing)
+            for r in rows], schema)
 
     def _docs_snapshot_schema(self) -> dict:
         """Column name -> StructField of the docs store (parquet footer
@@ -1619,44 +1602,23 @@ class SearchIndex:
     def phrase_docids(self, phrase: list[str]) -> DataFrame:
         """Docids containing the words at consecutive positions (reference R2
         ``phrase_resolve``, ``resolve_query_graph.rs:166-231``, rebuilt over
-        exact stored positions). -> DataFrame(docid long).
-
-        Distributed: postings rows for the phrase terms (bucket-pruned scan)
-        group by shard; each shard's pandas UDF decodes positions and
-        intersects — documents are disjoint across shards so results union.
+        exact stored positions): the ``_phrase_live`` kernel on the
+        ``_docid_set`` route (driver point reads within
+        ``driver_exec_max_postings``, one task per shard above it).
         Tombstoned documents are dropped (generation-horizon and full).
-        """
-        phrase = [t for t in phrase]
-        pq_df = self._postings_for(sorted(set(phrase)))
-        block_size = self.config.block_size  # capture scalars, not self
-        dead_bc, part_bc = self._deleted_bc, self._partial_bc
-
-        def match(pdf: pd.DataFrame) -> pd.DataFrame:
-            readers: dict[str, list[tuple[PostingReader, float]]] = {}
-            for row in pdf.to_dict("records"):
-                readers.setdefault(row["term"], []).append(
-                    (PostingReader.from_row(row, block_size), 1.0)
-                )
-            pt = part_bc.value if part_bc is not None else None
-            docs = _phrase_docids(readers, phrase, pt)
-            if dead_bc is not None and len(docs):
-                docs = docs[~np.isin(docs, dead_bc.value)]
-            return pd.DataFrame({"docid": pd.Series(docs, dtype="int64")})
-
-        return (
-            pq_df.groupby("shard")
-            .applyInPandas(match, schema="docid long")
-            .orderBy("docid")
-        )
+        -> DataFrame(docid long), sorted."""
+        words = list(phrase)
+        return self._docid_set(
+            words, lambda readers, deleted, pt: _phrase_live(
+                readers, deleted, pt, words))
 
     def expand_prefix_df(self, prefix: str) -> DataFrame:
         """Dictionary range scan (reference P11/P12 prefix postings):
-        -> DataFrame(term, df) for terms starting with ``prefix``."""
-        return (
-            self._terms.filter(F.col("term").startswith(prefix))
-            .select("term", "df")
-            .orderBy("term")
-        )
+        -> DataFrame(term, df) for terms starting with ``prefix``, sorted by
+        term. ``_expand_prefix`` reads the local dictionary when it is held
+        on the driver (no Spark job), else filters ``_terms`` with Spark."""
+        return _local_df(self.spark, sorted(self._expand_prefix(prefix).items()),
+                         "term string, df long")
 
 
 def hybrid_search(
@@ -2344,6 +2306,40 @@ def _phrase_docids(
 ) -> np.ndarray:
     """Docids (sorted) where the phrase occurs at consecutive positions."""
     return np.unique(_aligned_keys(readers, phrase, pt, occ_cache) >> 32)
+
+
+def _drop_deleted(docs: np.ndarray, deleted: np.ndarray | None) -> np.ndarray:
+    """``docs`` without the fully deleted docids ``deleted``."""
+    if deleted is None or not len(deleted) or not len(docs):
+        return docs
+    return docs[~np.isin(docs, deleted)]
+
+
+def _phrase_live(
+    readers: dict[str, list[tuple[PostingReader, float]]],
+    deleted: np.ndarray | None,
+    pt: tuple | None,
+    phrase: list[str],
+    occ_cache: dict[str, np.ndarray] | None = None,
+) -> np.ndarray:
+    """Sorted live docids holding ``phrase`` at consecutive positions:
+    ``_phrase_docids`` (generation-horizon tombstones ``pt``) minus the
+    full deletes."""
+    return _drop_deleted(_phrase_docids(readers, phrase, pt, occ_cache),
+                         deleted)
+
+
+def _live_union(
+    readers: dict[str, list[tuple[PostingReader, float]]],
+    deleted: np.ndarray | None,
+    pt: tuple | None,
+) -> np.ndarray:
+    """Sorted live docids holding any term of ``readers``: the union of
+    their ``_live_decode`` docids minus the full deletes."""
+    chunks = [_live_decode(r, pt)[0] for rs in readers.values() for r, _ in rs]
+    docs = np.unique(np.concatenate(chunks)) if chunks else np.zeros(
+        0, dtype=np.int64)
+    return _drop_deleted(docs, deleted)
 
 
 def _phrase_matches(

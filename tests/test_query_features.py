@@ -111,6 +111,23 @@ def test_sort_by_attribute(feature_index):
     assert [r["docid"] for r in page] == [3, 2]
 
 
+def test_search_sorted_query_candidates_are_search_candidates(feature_index):
+    """search_sorted(query=...) orders the docs search would return: a
+    negated word excludes its docs and a phrase must match, as in
+    search_rows."""
+    ix, _ = feature_index
+    sort = [("rating", "desc")]
+    assert [r["docid"] for r in ix.search_rows("pizza -guide")] == [4]
+    assert [r["docid"] for r in ix.search_sorted(
+        sort, query="pizza -guide").collect()] == [4]
+    for q in ('"new york"', '"new york" pizza', "york -travel", "pizza"):
+        want = {r["docid"] for r in ix.search_rows(q, k=10)}
+        got = ix.search_sorted(sort, query=q, k=10).collect()
+        assert want and {r["docid"] for r in got} == want, q
+        assert [r["rating"] for r in got] == sorted(
+            (r["rating"] for r in got), reverse=True), q
+
+
 def test_hybrid_merge(spark, feature_index):
     import numpy as np
 
@@ -258,6 +275,35 @@ def test_fetch_documents_returns_stored_fields(feature_index):
     )
 
 
+def test_fetch_documents_equals_docs_snapshot(spark, index_dir):
+    """fetch_documents decorates result rows with every stored column as
+    the live docs snapshot holds it, a timestamp column included, typed
+    like the snapshot and nullable."""
+    from pyspark.sql.types import StructField, StructType
+
+    from search_engine_spark.query import SearchIndex
+
+    ix = SearchIndex(spark, index_dir)
+    res = ix.search("web search page", k=10)
+    out = ix.fetch_documents(res)
+    snap = ix._docs_snapshot()
+    stored = [f for f in snap.schema.fields if f.name != "docid"]
+    assert "warc_ts" in {f.name for f in stored}
+    assert out.schema == StructType([
+        *res.select("rank", "docid", "score").schema.fields,
+        *[StructField(f.name, f.dataType, True) for f in stored]])
+    rows = out.collect()
+    hits = res.collect()
+    assert [(r["rank"], r["docid"], r["score"]) for r in rows] == [
+        (r["rank"], r["docid"], r["score"]) for r in hits]
+    want = {r["docid"]: r.asDict() for r in snap.filter(
+        F.col("docid").isin([r["docid"] for r in hits])).collect()}
+    assert len(want) == len(rows) == 10
+    for r in rows:
+        assert {f.name: r[f.name] for f in stored} == {
+            f.name: want[r["docid"]][f.name] for f in stored}, r["docid"]
+
+
 def test_fetch_documents_point_read_no_corpus_scan(feature_index):
     """Decorating k result rows must not plan a corpus scan/shuffle: the
     k-bounded path fetches stored fields via the pyarrow docs point read
@@ -268,7 +314,7 @@ def test_fetch_documents_point_read_no_corpus_scan(feature_index):
     plan = out._jdf.queryExecution().executedPlan().toString()
     # no corpus FileScan; the source is the driver-built k-row local frame
     # (the only Exchange allowed is orderBy's range partition over k rows)
-    assert "FileScan" not in plan and "ExistingRDD" in plan, plan
+    assert "FileScan" not in plan and "LocalTableScan" in plan, plan
     assert "SortMergeJoin" not in plan and "BroadcastHashJoin" not in plan, plan
     snip = ix.highlight_results(ix.search("pizza", k=2), "pizza")
     plan = snip._jdf.queryExecution().executedPlan().toString()

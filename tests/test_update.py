@@ -936,3 +936,117 @@ def test_search_many_equals_search_rows(spark, churned_index, index_dir):
         last.driver_exec_max_postings = budget
         got, want, _, _ = _batch_vs_rows(spark, last, queries, f"last-{budget}")
         assert got == want and all(want), budget
+
+
+def _surface_rows(spark, ix, calls, group):
+    """Run every ``(name, call)`` of ``calls`` as ``call(ix)`` and collect
+    it in its own job group -> {name: (schema json, rows)} and {name: Spark
+    jobs run}."""
+    sc = spark.sparkContext
+    rows, jobs = {}, {}
+    for name, call in calls:
+        g = f"{group}-{name}"
+        sc.setJobGroup(g, g)
+        try:
+            df = call(ix)
+            rows[name] = (df.schema.json(), [tuple(r) for r in df.collect()])
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs[name] = len(sc.statusTracker().getJobIdsForGroup(g))
+    return rows, jobs
+
+
+_SURFACE_CASES = (
+    dict(
+        phrases=[["banana", "recipe"], ["recipe", "banana"], ["spark", "query"],
+                 ["window", "stream", "planner"], ["banana", "zzqq"]],
+        terms=[["banana"], ["spark", "query"], ["recipe", "zzqq"], ["zzqq"]],
+        sorted=[("banana -recipe", None), ('"banana recipe"', {"lang": "fr"}),
+                ("spark query", None), ("spark -query", {"stars": {"$gte": 2}})],
+        sort=[("stars", "desc")],
+        prefixes=["s", "ba", "zz"],
+        suggest="banan recipee join zzzzzz opt* shufle",
+        suggest_want={"banan": ("banana", 1), "recipee": ("recipe", 1),
+                      "join": ("join", 0), "shufle": ("shuffle", 1)},
+    ),
+    dict(
+        phrases=[["web", "page"], ["the", "web"], ["search", "engine"],
+                 ["page", "the", "web"], ["zzqq", "web"]],
+        terms=[["web"], ["search", "engine", "crawl"], ["the", "zzqq"]],
+        sorted=[("web search", None), ("page -web", {"lang": "en"}),
+                ('"web page"', None), ("crawl", {"lang": "en"})],
+        sort=[("lang", "asc"), ("warc_ts", "desc")],
+        prefixes=["se", "pag", "zzz"],
+        suggest="serch engien web zzzzzz the pag*",
+        suggest_want={"serch": ("search", 1), "web": ("web", 0),
+                      "the": ("the", 0)},
+    ),
+)
+
+
+def test_per_result_surfaces_equal_across_routes(spark, churned_index,
+                                                 index_dir):
+    """phrase_docids, matching_docids, search_sorted(query=...),
+    expand_prefix_df and suggest return the same rows and schema on the
+    driver route and on the Spark route (driver_exec_max_postings = 0 and
+    _local_dict_max_terms = 0), on an index with three generations, full
+    and generation-horizon tombstones, and on the 400-doc fixture. On the
+    driver route the docid sets and the dictionary surfaces run no Spark
+    job; the docid sets equal a token scan of the live documents' text;
+    suggest honours typos_enabled=False."""
+    from search_engine_spark.analysis import tokenize_with_positions
+    from search_engine_spark.query import SearchIndex
+    from search_engine_spark.update import update_settings
+
+    def routes(d, calls, group):
+        driver = SearchIndex(spark, d)
+        driver._local_dict()  # the dictionary surfaces then run no Spark job
+        cluster = SearchIndex(spark, d)
+        cluster.driver_exec_max_postings = 0
+        cluster._local_dict_max_terms = 0
+        got, driver_jobs = _surface_rows(spark, driver, calls, group + "-d")
+        want, cluster_jobs = _surface_rows(spark, cluster, calls, group + "-c")
+        assert got == want
+        assert all(cluster_jobs.values()), cluster_jobs
+        return got, driver_jobs, driver
+
+    def has_phrase(toks, words):
+        occ = set(toks)
+        return any(all((w, p + i) in occ for i, w in enumerate(words))
+                   for t, p in toks if t == words[0])
+
+    for d, case in zip((churned_index, index_dir), _SURFACE_CASES):
+        free = (
+            [(f"phrase {ph}", lambda ix, ph=ph: ix.phrase_docids(ph))
+             for ph in case["phrases"]]
+            + [(f"match {ts}", lambda ix, ts=ts: ix.matching_docids(ts))
+               for ts in case["terms"]]
+            + [(f"prefix {p}", lambda ix, p=p: ix.expand_prefix_df(p))
+               for p in case["prefixes"]]
+            + [("suggest", lambda ix, q=case["suggest"]: ix.suggest(q))]
+        )
+        ranked = [(f"sorted {q} {f}", lambda ix, q=q, f=f: ix.search_sorted(
+            case["sort"], query=q, k=10, filter_ast=f))
+            for q, f in case["sorted"]]
+        got, jobs, ix = routes(d, free + ranked, "surf")
+        assert not any(jobs[name] for name, _ in free), jobs
+        assert all(got[name][1] for name, _ in ranked[:3])
+        live = {r["docid"]: tokenize_with_positions(r["text"])
+                for r in ix._docs_snapshot().select("docid", "text").collect()}
+        for ph in case["phrases"]:
+            assert [r[0] for r in got[f"phrase {ph}"][1]] == sorted(
+                doc for doc, toks in live.items() if has_phrase(toks, ph)), ph
+        for ts in case["terms"]:
+            assert [r[0] for r in got[f"match {ts}"][1]] == sorted(
+                doc for doc, toks in live.items()
+                if set(ts) & {t for t, _ in toks}), ts
+        assert got[f"phrase {case['phrases'][0]}"][1]
+        assert not got[f"phrase {case['phrases'][-1]}"][1]
+        # typo, exact, prefix (opt*, pag*: exact only) and no-candidate words
+        assert {r[0]: r[1:3] for r in got["suggest"][1]} == case["suggest_want"]
+
+    update_settings(spark, churned_index, typos_enabled=False)
+    got, _, _ = routes(churned_index, [(
+        "suggest", lambda ix: ix.suggest(_SURFACE_CASES[0]["suggest"]))],
+        "notypo")
+    assert [r[:3] for r in got["suggest"][1]] == [("join", "join", 0)]

@@ -620,12 +620,6 @@ class PostingReader:
         )
         return flat, tfs
 
-    def decode_block_positions(self, i: int) -> list[np.ndarray]:
-        """Per-doc sorted positions for block i — compat wrapper over the
-        flat form (``np.split`` views, no per-posting decode work)."""
-        flat, tfs = self.decode_block_flat_positions(i)
-        return np.split(flat, np.cumsum(tfs[:-1]))
-
     def decode_all_positions(self) -> list[np.ndarray]:
         flat, tfs = self.decode_flat_positions()
         return np.split(flat, np.cumsum(tfs[:-1]))

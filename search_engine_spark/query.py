@@ -23,15 +23,16 @@ top-k):
    proximity pair, exactness and words bucket), which ``score_details``
    reads back; phrase, phrase-synonym and exactness matching share one
    positional kernel, ``_aligned_keys``. A query whose postings fit
-   ``driver_exec_max_postings`` is scored on the driver over pyarrow point
-   reads (``_driver_gate``); the rest per shard (``groupBy('shard')``, or
-   ``cogroup`` with the filter's allowed docids) inside an Arrow-batched
-   pandas UDF. ``search_many`` runs that ``_topk`` per ``plan()`` over one
-   read of its batch's term union (``_batch_topk``), on either route;
-4. global merge: ``orderBy(score desc, docid asc).limit(k)`` over <=
-   num_shards*k candidate rows, then join display columns back from
-   doc_stats (reference O2 ``obkv_to_json``, ``src/lib.rs:209-234``).
-   Driver-built result frames come from ``_local_df`` (Arrow, no worker).
+   ``driver_exec_max_postings`` (``_fits_driver``, the one budget rule) is
+   scored on the driver over pyarrow point reads (``_driver_gate``); the
+   rest in one job (``_per_shard``) whose Arrow-batched pandas UDF,
+   ``_shard_task``, runs the kernel per shard. ``search_many`` runs
+   ``_topk`` per ``plan()`` over one read of its term union (``_batch_topk``);
+4. merge on the driver: the <= num_shards*(k+offset) shard rows are
+   collected, sorted (score desc, docid asc), paged and given their pk by
+   a pyarrow point read of doc_stats (``_ranked_rows``; reference O2
+   ``obkv_to_json``, ``src/lib.rs:209-234``). Result frames come from
+   ``_local_df`` (Arrow, no worker).
 
 Total order everywhere (heap, bounds, merge): (score desc, docid asc).
 WAND prunes only on STRICT inequality so bound==threshold ties are still
@@ -505,6 +506,14 @@ class SearchIndex:
             d = {r["term"]: r["df"] for r in rows}
         return {w: d[w] for w in words if w in d}
 
+    def _fits_driver(self, terms, extra: int = 0, ratio: int = 1) -> bool:
+        """The one point-read budget rule: ``terms``' postings (a term list,
+        or a term -> df map already looked up) plus ``extra`` fit
+        ``driver_exec_max_postings // ratio``. Within it a surface runs on
+        driver point reads; above it, per shard (``_per_shard``)."""
+        dfs = terms if isinstance(terms, dict) else self._lookup_exact(terms)
+        return sum(dfs.values()) + extra <= self.driver_exec_max_postings // ratio
+
     def _rank_splits(
         self, cands: list[tuple[int, int, str, str]]
     ) -> list[tuple[str, str]]:
@@ -535,8 +544,7 @@ class SearchIndex:
             c for c in cands if (c[2], c[3]) not in self._split_rank_cache
         ]
         if self.config.store_positions and (
-            not uncached
-            or sum(union_df.values()) <= self.driver_exec_max_postings
+            not uncached or self._fits_driver(union_df)
         ):
             if uncached:
                 terms = sorted({h for c in uncached for h in (c[2], c[3])})
@@ -857,7 +865,7 @@ class SearchIndex:
         if len(dfs) < len(set(words)):
             self._split_rank_cache[key] = 0
             return 0
-        if sum(dfs.values()) > self.driver_exec_max_postings:
+        if not self._fits_driver(dfs):
             return None
         n = len(_phrase_live(self._readers_for(sorted(dfs)), self._deleted,
                              self._partial_tombs, list(words)))
@@ -874,40 +882,46 @@ class SearchIndex:
             F.col("bucket").isin(buckets) & F.col("term").isin(terms)
         )
 
+    def _per_shard(
+        self, terms: list[str], task, schema: str,
+        filter_ast: dict | None = None,
+    ) -> DataFrame:
+        """The cluster route of every serving surface: ``task`` (a
+        ``_shard_task``) runs once per shard over its postings rows of
+        ``terms`` in one job, cogrouped with the shard's docids passing
+        ``filter_ast`` when given. -> the tasks' rows, typed ``schema``."""
+        postings = self._postings_for(terms).groupby("shard")
+        if filter_ast is None:
+            # one parameter: a two-parameter function is passed (key, pdf)
+            return postings.applyInPandas(lambda pdf: task(pdf), schema=schema)
+        allowed = self._doc_stats.filter(to_column(filter_ast)).select(
+            "docid",
+            (F.col("docid") % self.config.num_shards).cast("int").alias("shard"),
+        )
+        return postings.cogroup(allowed.groupby("shard")).applyInPandas(
+            task, schema=schema)
+
     def _docid_set(self, terms: list[str], kernel) -> DataFrame:
         """The docid-set route of the per-result surfaces:
         ``kernel(readers, deleted, partial_tombs)`` returns the sorted live
         docids of ``terms``' postings, applying both kinds of tombstones.
-        Under ``search_many``'s budget rule (the terms' df sum fits
-        ``driver_exec_max_postings``) it runs once over driver point reads
-        and no Spark job runs; above it, once per shard in one
-        ``groupby('shard')`` job (shards hold disjoint docids).
+        Within ``_fits_driver`` it runs once over driver point reads and no
+        Spark job runs; above it, once per shard (``_per_shard``).
         -> DataFrame(docid long), sorted."""
         terms = sorted(set(terms))
-        if sum(self._lookup_exact(terms).values()) <= self.driver_exec_max_postings:
+        if self._fits_driver(terms):
             docs = kernel(self._readers_for(terms),
                           self._deleted if len(self._deleted) else None,
                           self._partial_tombs)
             return _local_df(self.spark, [(d,) for d in docs.tolist()],
                              "docid long")
-        block_size, avgdl, gen_avgdl = (self.config.block_size, self.avgdl,
-                                        self.gen_avgdl)
-        dead_bc, part_bc = self._deleted_bc, self._partial_bc
-
-        def shard_docids(pdf: pd.DataFrame) -> pd.DataFrame:
-            docs = kernel(
-                _readers_from_rows(pdf.to_dict("records"), block_size, avgdl,
-                                   gen_avgdl),
-                dead_bc.value if dead_bc is not None else None,
-                part_bc.value if part_bc is not None else None,
-            )
-            return pd.DataFrame({"docid": pd.Series(docs, dtype="int64")})
-
-        return (
-            self._postings_for(terms).groupby("shard")
-            .applyInPandas(shard_docids, schema="docid long")
-            .orderBy("docid")
+        task = _shard_task(
+            lambda readers, deleted, pt, _allowed: kernel(readers, deleted, pt),
+            ("docid",), block_size=self.config.block_size, avgdl=self.avgdl,
+            gen_avgdl=self.gen_avgdl, deleted=self._deleted_bc,
+            partial_tombs=self._partial_bc,
         )
+        return self._per_shard(terms, task, "docid long").orderBy("docid")
 
     def search(
         self,
@@ -944,7 +958,7 @@ class SearchIndex:
         ``search()`` but returns plain dicts. On the driver point-read path
         no Spark DataFrame is materialized at all (``search()`` wraps the
         same rows in a ``_local_df``, tens of ms on a small index);
-        cluster-path queries collect their k-bounded result. The route is
+        cluster-path queries take ``_cluster_rows``. The route is
         ``_driver_gate``'s, the same rule ``execute(execution='auto')``
         applies: filtered queries take the driver route too when
         ``sum(df) + n_docs`` fits ``driver_exec_max_postings``."""
@@ -952,17 +966,10 @@ class SearchIndex:
         if not plan.term_weights:
             return []
         rows = self._driver_gate(plan, mode, offset, "auto", filter_ast)
-        if rows is not None:
-            return [
-                {"rank": r, "docid": d, "pk": p, "score": s}
-                for r, d, p, s in rows
-            ]
+        if rows is None:
+            rows = self._cluster_rows(plan, mode, offset, filter_ast)
         return [
-            r.asDict()
-            for r in self.execute(
-                plan, mode=mode, filter_ast=filter_ast, offset=offset,
-                execution="cluster",
-            ).collect()
+            {"rank": r, "docid": d, "pk": p, "score": s} for r, d, p, s in rows
         ]
 
     def search_many(
@@ -984,14 +991,14 @@ class SearchIndex:
 
         The union of every plan's terms picks one of two branches:
 
-        - driver: when its postings fit ``driver_exec_max_postings``, they
-          are point-read once with pyarrow, every query is scored
-          in-process and one ``_pk_lookup`` serves all result docids; no
-          Spark job runs;
-        - cluster: otherwise one ``groupby('shard').applyInPandas`` over
-          the union's postings; each shard task builds its readers once
-          and scores every query, a window over <= n_queries * num_shards
-          * k rows merges the shard top-k and a broadcast join adds pk.
+        - driver: when its postings fit ``driver_exec_max_postings``
+          (``_fits_driver``), they are point-read once with pyarrow and
+          every query is scored in-process; no Spark job runs;
+        - cluster: otherwise one ``_per_shard`` job over the union's
+          postings; each shard task builds its readers once and scores
+          every query; the shard rows are sorted per query on the driver.
+
+        Either way one ``_pk_lookup`` serves all result docids.
 
         ``queries``: list of ``(query_id, text)`` pairs or a DataFrame with
         columns ``(query_id, query)`` (collected: the query side is the
@@ -1024,51 +1031,38 @@ class SearchIndex:
         avgdl, k1, b = self.avgdl, self.config.k1, self.config.b
         exact_dl_check = not self.config.field_cols
 
-        if sum(self._lookup_exact(union).values()) <= self.driver_exec_max_postings:
+        if self._fits_driver(union):
             hits = _batch_topk(
                 self._readers_for(union) if plans else {}, plans,
                 self._deleted if len(self._deleted) else None,
                 self._partial_tombs, k, avgdl, k1, b, exact_dl_check,
             )
-            pk_map = self._pk_lookup([d for _, _, d, _ in hits]) if hits else {}
-            # rank typed like the cluster branch's row_number (non-null)
-            return self._rows_to_df(
-                [(q, r, d, pk_map.get(d), s) for q, r, d, s in hits],
-                f"query_id {qid_type}, rank int not null",
+        else:
+            def kernel(readers, deleted, pt, _allowed):
+                return [(q, d, s) for q, _r, d, s in _batch_topk(
+                    readers, plans, deleted, pt, k, avgdl, k1, b,
+                    exact_dl_check)]
+
+            task = _shard_task(
+                kernel, ("query_id", "docid", "score"),
+                block_size=self.config.block_size, avgdl=avgdl,
+                gen_avgdl=self.gen_avgdl, deleted=self._deleted_bc,
+                partial_tombs=self._partial_bc,
             )
-
-        block_size, gen_avgdl = self.config.block_size, self.gen_avgdl
-        deleted_bc, part_bc = self._deleted_bc, self._partial_bc
-
-        def shard_topk(pdf: pd.DataFrame) -> pd.DataFrame:
-            readers = _readers_from_rows(pdf.to_dict("records"), block_size,
-                                         avgdl, gen_avgdl)
-            rows = _batch_topk(
-                readers, plans,
-                deleted_bc.value if deleted_bc is not None else None,
-                part_bc.value if part_bc is not None else None,
-                k, avgdl, k1, b, exact_dl_check,
-            )
-            return _pairs_frame([(q, d, s) for q, _r, d, s in rows],
-                                ("query_id",))
-
-        shard_rows = self._postings_for(union).groupby("shard").applyInPandas(
-            shard_topk, schema=f"query_id {qid_type}, docid long, score double"
-        )
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("score").desc(), F.col("docid").asc()
-        )
-        ranked = (
-            shard_rows.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-        )
-        # pk lookup: ranked is <= n_queries * k rows — broadcast it so the
-        # join streams doc_stats without a shuffle (inner ≡ left here:
-        # every scored docid is live and present in doc_stats)
-        return (
-            F.broadcast(ranked)
-            .join(self._doc_stats.select("docid", "pk"), "docid")
-            .select("query_id", "rank", "docid", "pk", "score")
+            by_query: dict = {}
+            for q, d, s in self._per_shard(
+                union, task, f"query_id {qid_type}, docid long, score double"
+            ).collect():
+                by_query.setdefault(q, []).append((d, s))
+            hits = [
+                (q, i + 1, d, s) for q, _p in plans
+                for i, (d, s) in enumerate(sorted(
+                    by_query.get(q, ()), key=lambda x: (-x[1], x[0]))[:k])
+            ]
+        pk_map = self._pk_lookup([d for _, _, d, _ in hits]) if hits else {}
+        return self._rows_to_df(
+            [(q, r, d, pk_map.get(d), s) for q, r, d, s in hits],
+            f"query_id {qid_type}, rank int not null",
         )
 
     def matching_docids(self, terms: list[str]) -> DataFrame:
@@ -1106,7 +1100,7 @@ class SearchIndex:
         if query:
             p = self.plan(query, k)
             if not p.term_weights:
-                return _local_df(self.spark, [], ", ".join(["rank int"] + [
+                return _local_df(self.spark, [], ", ".join(["rank int not null"] + [
                     f"{_quote_ident(c)} {base.schema[c].dataType.simpleString()}"
                     for c in cols]))
             avgdl, k1, b = self.avgdl, self.config.k1, self.config.b
@@ -1219,11 +1213,12 @@ class SearchIndex:
         offset: int = 0, execution: str = "auto",
     ) -> DataFrame:
         """``execution``: 'cluster' always runs the document-partitioned
-        shard top-k; 'driver' forces the point-read path; 'auto' picks
-        'driver' when the query's posting slices are small enough
-        (``_driver_gate``: sum(df) <= driver_exec_max_postings, plus
-        n_docs when a filter is given, since the driver then scans
-        doc_stats with ``filters.to_arrow``). The driver path is the
+        shard top-k (``_cluster_rows``; its rows merge on the driver at any
+        k); 'driver' forces the point-read path; 'auto' picks 'driver' when
+        the query's posting slices are small enough (``_driver_gate``:
+        sum(df) <= driver_exec_max_postings, plus n_docs when a filter is
+        given, since the driver then scans doc_stats with
+        ``filters.to_arrow``). The driver path is the
         analogue of the reference's per-word LMDB point reads
         (src/search/db_cache.rs): partition- and row-group-pruned pyarrow
         reads + the SAME scorer functions, so the two paths are
@@ -1235,70 +1230,43 @@ class SearchIndex:
         """
         if not plan.term_weights:
             return self._rows_to_df([])
-
+        rows = None
         if execution != "cluster":
             rows = self._driver_gate(plan, mode, offset, execution, filter_ast)
-            if rows is not None:
-                return self._rows_to_df(rows)
-        elif filter_ast is not None:
-            require_fields(filter_ast, self._doc_stats_ds().schema.names)
+        if rows is None:
+            rows = self._cluster_rows(plan, mode, offset, filter_ast)
+        return self._rows_to_df(rows)
 
-        algo = _pick_algo(mode, plan, filter_ast is not None,
-                          self._partial_tombs is not None)
-        score_fn = make_shard_scorer(
+    def _cluster_rows(
+        self, plan: QueryPlan, mode: str, offset: int,
+        filter_ast: dict | None = None,
+    ) -> list[tuple]:
+        """The cluster route of ``execute`` and ``search_rows``: each
+        shard's top-(k + offset) (``make_shard_scorer`` on ``_per_shard``),
+        collected and merged on the driver like the driver route's rows.
+        -> (rank, docid, pk, score) tuples."""
+        has_filter = filter_ast is not None
+        if has_filter:
+            require_fields(filter_ast, self._doc_stats_ds().schema.names)
+        task = make_shard_scorer(
             block_size=self.config.block_size,
             avgdl=self.avgdl,
             k1=self.config.k1,
             b=self.config.b,
-            algo=algo,
-            has_filter=filter_ast is not None,
+            algo=_pick_algo(mode, plan, has_filter,
+                            self._partial_tombs is not None),
+            has_filter=has_filter,
             gen_avgdl=self.gen_avgdl,
             deleted=self._deleted_bc,
             exact_dl_check=not self.config.field_cols,
             partial_tombs=self._partial_bc,
             **vars(replace(plan, k=plan.k + offset)),
         )
-
-        pq_df = self._postings_for(_plan_terms(plan))
-        if filter_ast is not None:
-            allowed = self._doc_stats.filter(to_column(filter_ast)).select(
-                "docid",
-                (F.col("docid") % self.config.num_shards).cast("int").alias("shard"),
-            )
-            shard_topk = (
-                pq_df.groupby("shard")
-                .cogroup(allowed.groupby("shard"))
-                .applyInPandas(score_fn, schema=RESULT_SCHEMA)
-            )
-        else:
-            shard_topk = pq_df.groupby("shard").applyInPandas(
-                lambda pdf: score_fn(pdf, None), schema=RESULT_SCHEMA
-            )
-
-        # Tail assembly: shard_topk is <= num_shards * (k + offset) rows —
-        # for serving-sized k the global merge, pagination and pk lookup
-        # run on the driver (one job instead of three extra stages: global
-        # sort + broadcast join + window). Measured at 4M docs / local[32]:
-        # 0.6-1.2s per warm query saved. Large k (deep exports) keeps the
-        # distributed tail.
-        if (plan.k + offset) * self.config.num_shards <= 100_000:
-            merged = sorted(
-                ((r["docid"], r["score"]) for r in shard_topk.collect()),
-                key=lambda x: (-x[1], x[0]),
-            )[: offset + plan.k]
-            return self._rows_to_df(self._ranked_rows(merged, offset))
-
-        topk = shard_topk.orderBy(F.col("score").desc(), F.col("docid").asc()).limit(
-            plan.k + offset
-        )
-        w = Window.orderBy(F.col("score").desc(), F.col("docid").asc())
-        return (
-            topk.join(self._doc_stats.select("docid", "pk"), "docid", "left")
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") > offset)
-            .select("rank", "docid", "pk", "score")
-            .orderBy("rank")
-        )
+        shard_rows = self._per_shard(_plan_terms(plan), task, RESULT_SCHEMA,
+                                     filter_ast).collect()
+        merged = sorted(((r["docid"], r["score"]) for r in shard_rows),
+                        key=lambda x: (-x[1], x[0]))
+        return self._ranked_rows(merged[: offset + plan.k], offset)
 
     def _pk_lookup(self, docids: list[int]) -> dict:
         """pk per docid via a pyarrow point read of doc_stats (row-group
@@ -1426,14 +1394,12 @@ class SearchIndex:
                         f"exactly; use 'auto' or 'cluster': {e}") from e
                 return None
         all_terms = _plan_terms(plan)
-        dfs = self._lookup_exact(all_terms)
         algo = _pick_algo(mode, plan, expr is not None,
                           self._partial_tombs is not None)
-        budget = self.driver_exec_max_postings
-        if algo == "wand":
-            budget //= _WAND_DRIVER_COST_RATIO
-        cost = sum(dfs.values()) + (self.n_docs_indexed if expr is not None else 0)
-        if execution == "driver" or (execution == "auto" and cost <= budget):
+        fits = execution == "auto" and self._fits_driver(
+            all_terms, self.n_docs_indexed if expr is not None else 0,
+            _WAND_DRIVER_COST_RATIO if algo == "wand" else 1)
+        if execution == "driver" or fits:
             return self._execute_driver(plan, algo, offset, all_terms, expr)
         return None
 
@@ -1519,21 +1485,28 @@ class SearchIndex:
     # k-bounded anymore and the distributed join is the right plan.
     _DOC_FETCH_DRIVER_MAX = 10_000
 
-    def _attach_doc_cols(self, results: DataFrame, cols: list[str]) -> DataFrame:
-        """Attach stored document columns to a (small) results DataFrame.
+    def _attach_doc_cols(
+        self, results: DataFrame, cols: list[str], order_by: str | None = None
+    ) -> DataFrame:
+        """Attach stored document columns to a (small) results DataFrame,
+        sorted by the column ``order_by`` when given.
 
         <= _DOC_FETCH_DRIVER_MAX rows: collect the results (they are the
         k-bounded output of a search), pyarrow-point-read the docs snapshot
         for exactly those docids, and rebuild the decorated frame locally —
-        zero corpus shuffle, sub-second warm. Larger inputs keep the
-        distributed left join against the live snapshot."""
+        zero corpus shuffle, no Spark job once the docs schema is read.
+        Larger inputs keep the distributed left join against the live
+        snapshot."""
         missing = [c for c in cols if c not in results.columns]
         if not missing:
-            return results
+            return results if order_by is None else results.orderBy(order_by)
         rows = results.limit(self._DOC_FETCH_DRIVER_MAX + 1).collect()
         if len(rows) > self._DOC_FETCH_DRIVER_MAX:
             docs = self._docs_snapshot()
-            return results.join(docs.select("docid", *missing), "docid", "left")
+            out = results.join(docs.select("docid", *missing), "docid", "left")
+            return out if order_by is None else out.orderBy(order_by)
+        if order_by is not None:
+            rows.sort(key=lambda r: r[order_by])
         fields = self._docs_snapshot_schema()
         lookup = self._docs_lookup([r["docid"] for r in rows], missing)
         schema = StructType([*results.schema.fields, *[
@@ -1591,8 +1564,7 @@ class SearchIndex:
             if c not in ("docid", "gen")
         ]
         return self._attach_doc_cols(
-            results.select("rank", "docid", "score"), cols
-        ).orderBy("rank")
+            results.select("rank", "docid", "score"), cols, order_by="rank")
 
     # convenience for tests / oracle comparison
     def search_list(self, query: str, k: int = 10, **kw) -> list[tuple[int, float]]:
@@ -1749,35 +1721,42 @@ def make_shard_scorer(
     partial_tombs=None,
     **plan_fields,
 ):
-    """Build the per-shard scoring function (cogroup signature) for the
-    plan ``QueryPlan(**plan_fields)`` and the scorer ``algo``
-    (``_pick_algo``'s choice).
-
-    ``left``: postings rows of this shard for every query term — possibly
-    several rows per term (one per segment generation; docids are disjoint
-    across generations).
-    ``right``: allowed docids (filter), or None when has_filter=False.
-    Returns <=k rows (docid, score), ties (score desc, docid asc).
-    """
+    """``execute``'s shard scorer: ``_shard_task`` bound to ``_topk`` for
+    the plan ``QueryPlan(**plan_fields)`` and the scorer ``algo``
+    (``_pick_algo``'s choice). Each task returns <=k rows (docid, score),
+    ties (score desc, docid asc)."""
     plan = QueryPlan(**plan_fields)
-    gen_avgdl = gen_avgdl or {}
-    # `deleted` is either a plain sorted np.ndarray (tests / driver reuse)
-    # or a pyspark Broadcast of one: a Broadcast pickles as a tiny handle,
-    # so tombstones ship once per executor (torrent) instead of once per
-    # task closure. Resolve lazily inside the scorer (executor-side).
-    if deleted is not None and isinstance(deleted, np.ndarray) and not len(deleted):
-        deleted = None
+    return _shard_task(
+        lambda readers, tomb, pt, allowed: _topk(
+            readers, plan, algo, plan.k, avgdl, k1, b, tomb, allowed, pt,
+            exact_dl_check),
+        ("docid", "score"), block_size=block_size, avgdl=avgdl,
+        gen_avgdl=gen_avgdl or {}, deleted=deleted,
+        partial_tombs=partial_tombs, has_filter=has_filter,
+    )
 
-    def scorer(left: pd.DataFrame, right: pd.DataFrame | None = None) -> pd.DataFrame:
+
+def _shard_task(
+    kernel, cols: tuple[str, ...], *, block_size: int, avgdl: float,
+    gen_avgdl: dict[int, float], deleted=None, partial_tombs=None,
+    has_filter: bool = False,
+):
+    """The one shard task of the cluster route (``SearchIndex._per_shard``)
+    -> ``task(left, right=None)``: readers from the shard's postings rows
+    ``left`` (one per term and generation), then ``kernel(readers, deleted,
+    partial_tombs, allowed)``'s rows as a ``_pairs_frame`` of ``cols``.
+    ``allowed``: the cogroup's right side (the shard's docids passing the
+    filter), sorted, when ``has_filter``; else None. The tombstones come
+    plain or as pyspark Broadcasts (a tiny pickled handle: they ship once
+    per executor, not per task closure), unwrapped here, executor-side."""
+    def task(left: pd.DataFrame, right: pd.DataFrame | None = None) -> pd.DataFrame:
         if len(left) == 0:
-            return _pairs_frame([])
+            return _pairs_frame([], cols)
         tomb = deleted.value if hasattr(deleted, "value") else deleted
         if tomb is not None and not len(tomb):
             tomb = None
         pt = (partial_tombs.value if hasattr(partial_tombs, "value")
               else partial_tombs)
-        readers = _readers_from_rows(left.to_dict("records"), block_size,
-                                     avgdl, gen_avgdl)
         allowed: np.ndarray | None = None
         if has_filter:
             allowed = (
@@ -1785,18 +1764,20 @@ def make_shard_scorer(
                 if right is not None and len(right)
                 else np.zeros(0, dtype=np.int64)
             )
+        readers = _readers_from_rows(left.to_dict("records"), block_size,
+                                     avgdl, gen_avgdl)
+        return _pairs_frame(kernel(readers, tomb, pt, allowed), cols)
 
-        return _pairs_frame(_topk(readers, plan, algo, plan.k, avgdl, k1, b,
-                                  tomb, allowed, pt, exact_dl_check))
-
-    return scorer
+    return task
 
 
-def _pairs_frame(rows: list[tuple], head: tuple[str, ...] = ()) -> pd.DataFrame:
-    """A shard task's top-k rows -> its pandas result frame: ``head``
-    columns, then (docid int64, score float64), typed even when empty."""
-    return pd.DataFrame(rows, columns=[*head, "docid", "score"]).astype(
-        {"docid": "int64", "score": "float64"})
+def _pairs_frame(rows, cols: tuple[str, ...]) -> pd.DataFrame:
+    """A shard task's rows (tuples, or a docid array) -> its pandas result
+    frame of ``cols``, docid int64 and score float64, typed even when
+    empty."""
+    types = {"docid": "int64", "score": "float64"}
+    return pd.DataFrame(rows, columns=list(cols)).astype(
+        {c: types[c] for c in cols if c in types})
 
 
 def _readers_from_rows(

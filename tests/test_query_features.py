@@ -304,6 +304,41 @@ def test_fetch_documents_equals_docs_snapshot(spark, index_dir):
             f.name: want[r["docid"]][f.name] for f in stored}, r["docid"]
 
 
+def test_fetch_documents_runs_no_spark_job(spark, feature_index):
+    """On a handle that has read the docs schema, decorating a driver-route
+    result runs no Spark job and returns the rows in rank order, whatever
+    the order of its input rows."""
+    from search_engine_spark.query import _local_df
+
+    ix, _ = feature_index
+    ix._local_dict()
+    ix._docs_snapshot_schema()
+    sc = spark.sparkContext
+    sc.setJobGroup("fetch-docs", "fetch-docs")
+    try:
+        res = ix.search("new york pizza", k=5)
+        rows = ix.fetch_documents(res).collect()
+        shuffled = _local_df(spark, [tuple(r) for r in res.collect()][::-1],
+                             res.schema)
+        again = ix.fetch_documents(shuffled).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("fetch-docs") == []
+    assert len(rows) > 2 and [r["rank"] for r in rows] == list(
+        range(1, len(rows) + 1))
+    assert again == rows
+
+
+def test_search_sorted_no_term_schema_equals_hit_schema(feature_index):
+    """A query without a scoring term returns search_sorted's hit schema,
+    nullability included."""
+    ix, _ = feature_index
+    sort = [("rating", "desc")]
+    hit = ix.search_sorted(sort, query="york")
+    assert hit.count()
+    assert ix.search_sorted(sort, query="!!!").schema == hit.schema
+
+
 def test_fetch_documents_point_read_no_corpus_scan(feature_index):
     """Decorating k result rows must not plan a corpus scan/shuffle: the
     k-bounded path fetches stored fields via the pyarrow docs point read
@@ -312,10 +347,10 @@ def test_fetch_documents_point_read_no_corpus_scan(feature_index):
     res = ix.search("pizza", k=2)
     out = ix.fetch_documents(res)
     plan = out._jdf.queryExecution().executedPlan().toString()
-    # no corpus FileScan; the source is the driver-built k-row local frame
-    # (the only Exchange allowed is orderBy's range partition over k rows)
+    # no corpus FileScan and no Exchange; the source is the driver-built
+    # k-row local frame
     assert "FileScan" not in plan and "LocalTableScan" in plan, plan
-    assert "SortMergeJoin" not in plan and "BroadcastHashJoin" not in plan, plan
+    assert "Exchange" not in plan and "Join" not in plan, plan
     snip = ix.highlight_results(ix.search("pizza", k=2), "pizza")
     plan = snip._jdf.queryExecution().executedPlan().toString()
     assert "FileScan" not in plan and "Exchange" not in plan, plan

@@ -1050,3 +1050,30 @@ def test_per_result_surfaces_equal_across_routes(spark, churned_index,
         "suggest", lambda ix: ix.suggest(_SURFACE_CASES[0]["suggest"]))],
         "notypo")
     assert [r[:3] for r in got["suggest"][1]] == [("join", "join", 0)]
+
+
+def test_deep_k_cluster_equals_driver(spark, churned_index):
+    """At a depth where (k + offset) * num_shards exceeds 100_000 rows, the
+    cluster route's merge returns the driver route's rows and column types, for
+    a plain, a phrase and a lang-filtered query, on an index with full and
+    generation-horizon tombstones."""
+    from search_engine_spark.query import SearchIndex
+
+    ix = SearchIndex(spark, churned_index)
+    assert len(ix._deleted) and ix._partial_tombs is not None
+    k, offset = 50_000, 3
+    assert (k + offset) * ix.config.num_shards > 100_000
+
+    def key(df):
+        return df.dtypes, [(r["rank"], r["docid"], r["pk"], round(r["score"], 9))
+                           for r in df.collect()]
+
+    for q, f in (("banana recipe spark", None), ('"banana recipe"', None),
+                 ("spark query window", {"lang": "fr"})):
+        plan = ix.plan(q, k)
+        got = key(ix.execute(plan, filter_ast=f, offset=offset,
+                             execution="cluster"))
+        want = key(ix.execute(plan, filter_ast=f, offset=offset,
+                              execution="driver"))
+        assert got == want, q
+        assert want[1] and want[1][0][0] == offset + 1, q
